@@ -708,6 +708,17 @@ object Hdf5Minimal {
     Group(datasets.toSeq, subgroups.toSeq, attrs)
   }
 
+  /** Widest numeric datatype a dataset may declare: the widest class this
+    * reader decodes is 8 bytes, so anything past 64 is a corrupt header.
+    */
+  private val MaxNumericTypeBytes = 64
+
+  /** Widest fixed-length string dataset. Provenance strings carry file
+    * paths (NeXus `appdef_command`), so the numeric bound is far too
+    * tight; 64 KiB still rejects a hostile size before any allocation.
+    */
+  private[loader] val MaxStringTypeBytes = 64 * 1024
+
   private def readDataset(
       bytes: Array[Byte], buf: ByteBuffer, name: String, hdrAddr: Long,
   ): Dataset = {
@@ -718,7 +729,9 @@ object Hdf5Minimal {
     val dims = parseDataspace(msg(0x0001, "dataspace"))
     require(dims.forall(_ >= 0), s"dataset $name: negative dataspace dim")
     val (cls, size, signed) = parseDatatype(msg(0x0003, "datatype"), name)
-    require(size > 0 && size <= 64,
+    if (cls == 3) require(size > 0 && size <= MaxStringTypeBytes,
+      s"dataset $name: string datatype size $size outside the 64 KiB string bound")
+    else require(size > 0 && size <= MaxNumericTypeBytes,
       s"dataset $name: implausible datatype size $size")
     // overflow-safe: a lying dataspace (dims whose product wraps Long)
     // must fail with a named error, not allocate a wrapped-small array

@@ -91,8 +91,9 @@ object Dedup {
     * `(a_i * (h(s) mod p) + b_i) mod p` with the Mersenne prime `2^31 − 1`.
     * Both factors stay below 2^31, so the product fits a Long without
     * overflow (Spark 4 runs ANSI arithmetic — a wider prime would throw).
+    * The native kernels evaluate the family in [[AffineMinHash]].
     */
-  private val MersennePrime = (1L << 31) - 1
+  private val MersennePrime = AffineMinHash.P
 
   /** The seeded affine-hash family coefficients — exposed so an external
     * oracle (SQL generation) can reproduce the exact signature arithmetic.

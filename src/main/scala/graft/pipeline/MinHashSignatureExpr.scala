@@ -2,23 +2,25 @@ package graft.pipeline
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native codegen expression: the full MinHash signature in ONE pass over
-  * the reduced shingle-hash array.
+/** Native codegen expression: the full MinHash signature from the reduced
+  * shingle-hash array.
   *
   * The declarative form — `numHashes` sibling
   * `array_min(transform(base, h => (a·h + b) mod p))` subtrees — walks the
   * base array once per hash function through Catalyst's interpreted
   * higher-order-function machinery (a lambda-variable write + boxed eval
   * per element), allocating `numHashes` intermediate arrays per document.
-  * This kernel keeps the running minima in a local `long[]` and visits each
-  * shingle hash exactly once: `O(|shingles| · numHashes)` tight Long
-  * arithmetic, no allocation beyond the result array.
+  * This kernel copies the base hashes into an `int[]` once and runs the
+  * family's shared minima loop ([[AffineMinHash.signature]], the same one
+  * [[MinHashTextExpr]] uses): `O(|shingles| · numHashes)` tight Long
+  * arithmetic with the minima in registers.
   *
   * Bit-identical to the declarative form (same affine family, same
-  * Mersenne-prime reduction — the DuckDB oracle mirror is unchanged);
+  * reduction mod the Mersenne prime — the DuckDB oracle mirror is
+  * unchanged);
   * an empty shingle set yields all-null elements exactly like
   * `array_min(empty)`.
   */
@@ -64,29 +66,23 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int, seed: Long)
 
 object MinHashSignatureExpr {
 
-  private val P = (1L << 31) - 1
-
-  /** One-pass signature kernel shared by interpreted eval and codegen.
-    * Base hashes must already be reduced below 2^31 (see
-    * [[Dedup.baseShingleHashes]]) so `h·a + b < 2^62` never overflows.
+  /** Signature kernel shared by interpreted eval and codegen:
+    * copies the base hashes and runs [[AffineMinHash.signature]]. Base
+    * hashes must already be reduced below 2^31 (see
+    * [[Dedup.baseShingleHashes]]); anything else fails loudly instead of
+    * being truncated.
     */
   def compute(base: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
-    val n = base.numElements()
-    val k = as.length
-    if (n == 0) return new GenericArrayData(new Array[Any](k)) // all null
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
+    val m = base.numElements()
+    val hs = new Array[Int](m)
     var i = 0
-    while (i < n) {
+    while (i < m) {
       val h = base.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = (h * as(j) + bs(j)) % P
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
+      if ((h >>> 31) != 0) throw new IllegalArgumentException(
+        s"MinHash base hash $h at index $i is outside [0, 2^31)")
+      hs(i) = h.toInt
       i += 1
     }
-    new GenericArrayData(mins)
+    AffineMinHash.signature(hs, m, as, bs)
   }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,21 +17,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback): `sequence` materializes a boxed index array,
   * `transform(substr)` allocates one UTF8String copy per shingle
   * position, `array_distinct` builds a hash set over those strings, and a
-  * second `transform(pmod(xxhash64))` boxes one Long per shingle — ~6.5 µs
-  * of allocation-heavy interpreted work per 300-char document where the
-  * arithmetic itself is ~0.3 µs (MinhashProbe, NOTES round-19 ledger).
-  * This kernel walks the UTF-8 bytes once, hashing each k-char shingle
-  * IN PLACE (`XXH64.hashUnsafeBytes` over the parent string's buffer —
-  * a codepoint substring of UTF-8 is a contiguous byte slice, so no copy)
-  * and folding it into the running minima immediately.
+  * second `transform(pmod(xxhash64))` boxes one Long per shingle.
+  *
+  * The kernel instead runs two tight loops per document:
+  *  - **walk:** one pass over the UTF-8 bytes with a ring of the last `k`
+  *    codepoint starts and a wrapping head (no division per character).
+  *    Each k-char shingle is hashed IN PLACE (`XXH64.hashUnsafeBytes`
+  *    over the parent string's buffer — a codepoint substring of UTF-8 is
+  *    a contiguous byte slice, so no copy) and its reduced hash collected
+  *    into an `int[]`;
+  *  - **minima:** [[AffineMinHash.signature]] computes the `numHashes`
+  *    minima hash-major, four functions per pass with register
+  *    accumulators, reducing `(h·a + b) mod (2^31 − 1)` with a Mersenne
+  *    fold instead of a 64-bit `%`. Repeated shingles stay in the array:
+  *    a min over a multiset equals the min over its set, and a distinct
+  *    pass cost more on all-distinct text than it saved on the benchmark
+  *    corpus (NOTES.md, MinHash kernel entry).
+  * All scratch arrays are allocated per call: generated code runs tasks
+  * concurrently, so nothing lives in a shared object.
   *
   * Bit-identical to the declarative form, including edge semantics:
   *  - same shingle byte content → same `xxhash64` (seed 42, Spark's
   *    string-hash default) → same `pmod(·, 2^31−1)` reduction → same
-  *    seeded affine family and min-reduction as [[MinHashSignatureExpr]];
-  *  - `array_distinct` is dropped because a min over a multiset equals
-  *    the min over its support — duplicate shingles cannot change any
-  *    signature position;
+  *    seeded affine family and min-reduction as [[MinHashSignatureExpr]]
+  *    (both run the one loop in [[AffineMinHash]]);
   *  - texts shorter than `k` (including empty) produce the all-null
   *    signature, exactly like `array_min(empty)` downstream of the old
   *    `when(length >= k, …).otherwise(array())` guard;
@@ -99,68 +108,65 @@ case class MinHashTextExpr(child: Expression, k: Int, numHashes: Int, seed: Long
 
 object MinHashTextExpr {
 
-  private val P = (1L << 31) - 1
-  private val XxSeed = 42L // Spark's xxhash64(...) default seed
+  private final val XxSeed = 42L // Spark's xxhash64(...) default seed
 
   /** One-pass text → signature kernel shared by interpreted eval and
     * codegen. Walks codepoint starts exactly like `UTF8String.substring`
     * (so char-k-gram boundaries match the declarative `substr` shingles),
     * hashes each k-gram — `pmod(xxhash64(slice), p)` by default, or the
     * portable Horner polynomial over codepoints ([[TextOps.polyHashFixed]],
-    * the form the DuckDB oracle mirrors) — and folds it into the
-    * `numHashes` running minima.
+    * the form the DuckDB oracle mirrors) — collects the reduced hashes
+    * and hands them to [[AffineMinHash.signature]].
     */
   def compute(s: UTF8String, k: Int,
       as: Array[Long], bs: Array[Long], portable: Boolean = false): ArrayData = {
-    val n = as.length
-    if (s == null) return new GenericArrayData(new Array[Any](n))
+    if (s == null) return AffineMinHash.signature(null, 0, as, bs)
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val nb = s.numBytes()
-    var mins: Array[Long] = null
-    // ring buffers of the last k+1 codepoint start offsets (and, for the
-    // portable polynomial, the last k codepoint values)
-    val ring = new Array[Int](k + 1)
+    // a text of c codepoints has c − k + 1 shingles, and c ≤ nb
+    val hs = new Array[Int](math.max(nb - k + 1, 0))
+    var m = 0
+    // rings of the last k codepoint start offsets (and, for the portable
+    // polynomial, codepoint values); after a step `head` is the slot of
+    // the oldest, i.e. the first codepoint of the current shingle
+    val ring = new Array[Int](k)
     val cps: Array[Int] = if (portable) new Array[Int](k) else null
-    var charIdx = 0
+    var head = 0
+    var chars = 0
     var b = 0
     while (b < nb) {
-      ring(charIdx % (k + 1)) = b
-      if (portable) cps(charIdx % k) = codePointAt(s, b, nb)
+      ring(head) = b
+      if (portable) cps(head) = codePointAt(s, b, nb)
       b += UTF8String.numBytesForFirstByte(s.getByte(b))
-      charIdx += 1
-      if (charIdx >= k) {
+      head += 1
+      if (head == k) head = 0
+      chars += 1
+      if (chars >= k) {
         var h = 0L
         if (portable) {
-          // Horner per window over the ring of codepoints, one mod per
-          // step — polyHashFixed verbatim (base 31, p = 2^31−1)
-          var j = charIdx - k
-          while (j < charIdx) {
-            h = (h * 31L + cps(j % k)) % P
-            if (h < 0) h += P
+          // Horner over the ring, oldest first — polyHashFixed verbatim
+          // (base 31, p = 2^31−1; every step stays non-negative)
+          var j = head
+          var t = 0
+          while (t < k) {
+            h = AffineMinHash.reduce(h * 31L + cps(j))
             j += 1
+            if (j == k) j = 0
+            t += 1
           }
         } else {
-          val start = ring((charIdx - k) % (k + 1))
+          val start = ring(head)
           // clamp like UTF8String.substring does on a truncated final char
           val end = if (b < nb) b else nb
-          h = XXH64.hashUnsafeBytes(base, off + start, end - start, XxSeed) % P
-          if (h < 0) h += P // pmod
+          h = AffineMinHash.pmod(
+            XXH64.hashUnsafeBytes(base, off + start, end - start, XxSeed))
         }
-        if (mins == null) {
-          mins = new Array[Long](n)
-          java.util.Arrays.fill(mins, Long.MaxValue)
-        }
-        var j = 0
-        while (j < n) {
-          val v = (h * as(j) + bs(j)) % P
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
+        hs(m) = h.toInt
+        m += 1
       }
     }
-    if (mins == null) new GenericArrayData(new Array[Any](n))
-    else new GenericArrayData(mins)
+    AffineMinHash.signature(hs, m, as, bs)
   }
 
   /** Unicode codepoint starting at byte offset `b` — the value

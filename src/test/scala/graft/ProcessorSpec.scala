@@ -348,6 +348,26 @@ class ProcessorSpec extends SparkSpec {
     }
   }
 
+  test("NeXus save under a path longer than 64 characters reads back") {
+    val p = new Processor(spark, events, Some(events))
+    val cube = p.compute(Seq(UniformAxis("value", 10, 0.0, 500.0),
+      UniformAxis("user_id", 8, 0.0, 200.0)))
+    val dir = Files.createTempDirectory("psave").toFile
+    val path = s"${dir.getPath}/${"long_nexus_file_name_" * 4}scan.nxs"
+    try {
+      assert(path.length > 64)
+      p.save(path)
+      assert(CubeIO.readNexus(path).data.toSeq === cube.data.toSeq)
+      val validation = Hdf5Minimal.read(path).group("entry").group("process")
+        .group("validation")
+      assert(validation.dataset("appdef_command").data ===
+        Hdf5Minimal.Str(s"verify_nexus $path"))
+    } finally {
+      dir.listFiles().foreach(_.delete())
+      dir.delete()
+    }
+  }
+
   test("CubeIO dense round trip preserves data, axes, shape") {
     val cube = BinnedCube(
       Seq("x", "y"),

@@ -130,6 +130,24 @@ class Hdf5Spec extends SparkSpec {
     assert(e.getMessage.contains("superblock v2"))
   }
 
+  test("hdf5: string datasets have their own 64 KiB bound; numeric stay ≤ 64 bytes") {
+    def file(v: String) = writeBytes(Group(datasets = Seq(Dataset("s", Str(v)))))
+    // the writer stores value + NUL: this one sits exactly on the bound
+    val widest = "p" * (MaxStringTypeBytes - 1)
+    assert(parse(file(widest)).dataset("s").data === Str(widest))
+    val e = intercept[IllegalArgumentException](parse(file(widest + "p")))
+    assert(e.getMessage.contains("64 KiB string bound"), e.getMessage)
+    // an f64 datatype message (class 1, size 8, precision 64) claiming 72
+    // bytes is still a corrupt numeric header
+    val b = writeBytes(Group(datasets = Seq(Dataset("d", F64(Array(1.0))))))
+    val le = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val at = (0 until b.length - 12).find(i => b(i) == 0x11 && le.getInt(i + 4) == 8 &&
+      le.getShort(i + 8) == 0 && le.getShort(i + 10) == 64).get
+    le.putInt(at + 4, 72)
+    val e2 = intercept[IllegalArgumentException](parse(b))
+    assert(e2.getMessage.contains("implausible datatype size 72"), e2.getMessage)
+  }
+
   test("hdf5: mpes-layout .h5 ingests through the Spark binaryFile path") {
     val dir = Files.createTempDirectory("h5").toFile.getPath
     StreamFixture.writeH5(s"$dir/Scan0030_2.h5", StreamFixture.StreamData(

@@ -21,6 +21,14 @@ class MinHashTextExprSpec extends SparkSpec {
     transform(array(Dedup.baseShingleHashes(text, k)), base =>
       Dedup.minhashFromBase(base, numHashes, seed)).getItem(0)
 
+  /** ~20 k seeded CJK codepoints from a 4 000-symbol alphabet: every
+    * 5-gram is distinct (checked below), so the shingle set only grows.
+    */
+  private val allDistinct: String = {
+    val rnd = new scala.util.Random(2020)
+    (0 until 20000).map(_ => (0x4E00 + rnd.nextInt(4000)).toChar).mkString
+  }
+
   private val corpus: Seq[String] = Seq(
     "the quick brown fox jumps over the lazy dog",
     "aaaaaaaaaaaaaaaaaaaaaaa", // one distinct shingle, many duplicates
@@ -35,6 +43,9 @@ class MinHashTextExprSpec extends SparkSpec {
     "tab\tand\nnewline  spaced", // whitespace inside shingles
     ("repeated phrase " * 40).trim, // long text, heavy shingle duplication
     (0 until 400).map(i => ('a' + i % 26).toChar).mkString, // long cycle
+    allDistinct, // long text, no repeated 5-gram
+    "é日🦊ñ語", // exactly k=5 codepoints of 2, 3, 4, 2 and 3 bytes
+    "🦊" * 3000, // long text, one repeated 4-byte shingle for every k
   )
 
   private def check(k: Int, numHashes: Int, seed: Long): Unit = {
@@ -100,6 +111,29 @@ class MinHashTextExprSpec extends SparkSpec {
       declarative(col("text"), 5, 32, 42L).as("decl"),
     ).filter(not(col("fused") <=> col("decl"))).count()
     assert(bad === 0L)
+  }
+
+  test("the all-distinct corpus input really has no repeated 5-gram") {
+    assert(allDistinct.sliding(5).toSet.size === allDistinct.length - 4)
+  }
+
+  test("both expressions match the plain %-based reference kernel") {
+    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+    for ((k, n, seed) <- Seq((5, 32, 42L), (1, 8, 42L), (3, 17, 7L));
+         portable <- Seq(false, true)) {
+      val text = org.apache.spark.sql.GraftBridge.column(MinHashTextExpr(
+        org.apache.spark.sql.GraftBridge.expression(col("text")), k, n, seed, portable))
+      val fromBase = Dedup.minhashFromBase(Dedup.baseShingleHashes(col("text"), k, portable),
+        n, seed)
+      df.select(col("id"), text, fromBase).collect().foreach { r =>
+        val t = corpus(r.getLong(0).toInt)
+        val want = MinHashReference.textSignature(t, k, n, seed, portable)
+        val what = s"id=${r.getLong(0)} k=$k n=$n seed=$seed portable=$portable"
+        assert(r.getSeq[Any](1) === want, s"MinHashTextExpr $what")
+        assert(r.getSeq[Any](2) === want, s"MinHashSignatureExpr $what")
+      }
+    }
   }
 
   test("null and short text produce the all-null signature, never a null array") {
