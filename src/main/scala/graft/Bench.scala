@@ -23,8 +23,9 @@ import graft.dfops.DfOps
   * task-launch floors. Adding entries is contract-allowed; it inflates
   * `value`, so cross-round TOTALS are comparable only over shared names.
   *
-  * Timing discipline (the BinProbe protocol, promoted here after round 12
-  * proved the old per-query min-of-5 unreproducible on a shared box —
+  * Timing discipline (the protocol of the round-12 histogram-strategy
+  * table in NOTES.md, promoted here after round 12 proved the old
+  * per-query min-of-5 unreproducible on a shared box —
   * same-HEAD committed artifacts swung 2.8 s → 47.2 s on allocation-heavy
   * queries while the single-thread CPU canary stayed quiet):
   *

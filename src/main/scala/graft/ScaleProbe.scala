@@ -127,7 +127,7 @@ object ScaleProbe {
     }
 
     // "bin64": the kernel histogram's weak-scaling rehearsal — rows
-    // ×1..×64 through the SHIPPED HistogramPlan.Auto (CountByKey kernel
+    // ×1..×64 through the SHIPPED Binning.histogram (CountByKey kernel
     // at both cube sizes here) at the two cube regimes that matter:
     // ~1e6 cells (32⁴ — strong map-side combining still possible) and
     // 1e8 cells (100⁴, the reference shape — rows ≈ cells, combining

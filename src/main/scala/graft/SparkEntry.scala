@@ -78,7 +78,8 @@ object SparkEntry {
   )
 
   /** 4-D at the reference's 100-bins-per-axis cube scale (1e8 cells) —
-    * routes [[HistogramPlan.Kernel]] under auto. */
+    * past [[graft.binning.HistogramKernel.kernelCellsFloor]], so
+    * [[Binning.histogram]] counts it with the two-phase kernel. */
   val ax4dHuge: Seq[UniformAxis] = Seq(
     UniformAxis("l_quantity", 100, 1.0, 50.0),
     UniformAxis("l_extendedprice", 100, 900.0, 105000.0),
@@ -221,9 +222,8 @@ object SparkEntry {
     "q_bin4d" -> ((s, dir) =>
       Binning.histogram(table(s, dir, "lineitem"), ax4d)),
     // A3 at reference cube scale: 100 bins/axis = 1e8 cells ≥ the 2^17
-    // auto-routing floor, so this row gates the primitive two-phase
-    // count kernel (HistogramPlan.Kernel) the classic q_bin4d cube is
-    // too small to reach
+    // kernel floor, so this row gates the primitive two-phase count
+    // kernel (CountByKey) the classic q_bin4d cube is too small to reach
     "q_bin4d_huge" -> ((s, dir) =>
       Binning.histogram(table(s, dir, "lineitem"), ax4dHuge)),
     // A2: explicit-edge histogram (binsearch kernel)

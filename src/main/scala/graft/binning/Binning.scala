@@ -100,12 +100,18 @@ object Binning {
     * range are excluded (matching the kernel's `is_inside` early-exit).
     * Counts are exact Long — a documented deliberate divergence from the
     * reference's overflow-tolerant uint32 (`numba_bin.py:162-168`).
+    *
+    * The count path follows from the cube alone: below
+    * [[HistogramKernel.kernelCellsFloor]] cells a plain `groupBy` on the
+    * flat key; larger cubes the two-phase [[graft.plans.CountByKey]]
+    * kernel with its packed exchange (the measurements behind the split
+    * are in the floor's scaladoc); cubes whose cell count overflows the
+    * Long key a per-axis `groupBy`.
     */
   def histogram(
       df: DataFrame,
       axes: Seq[BinAxis],
       countName: String = "cnt",
-      plan: HistogramPlan = HistogramPlan.Auto,
   ): DataFrame = {
     require(axes.nonEmpty, "at least one bin axis required")
     flatStrides(axes) match {
@@ -125,26 +131,12 @@ object Binning {
         val cells = axes.map(_.nBins.toLong).product
         val flat = df.select(flatBinIndex(axes, strides).as("_flat"))
           .filter(col("_flat") >= 0) // -1 ⇔ out of range / null on any axis
-        val chosen = plan match {
-          case HistogramPlan.Auto =>
-            if (cells >= HistogramKernel.kernelCellsFloor) HistogramPlan.Kernel
-            else HistogramPlan.Classic
-          case p => p
-        }
-        val counted = chosen match {
-          case HistogramPlan.Classic =>
+        val counted =
+          if (cells < HistogramKernel.kernelCellsFloor)
             flat.groupBy(col("_flat")).agg(count(lit(1)).as(countName))
-          case HistogramPlan.Kernel =>
-            kernelCounts(flat, cells, raw = false, countName)
-          case HistogramPlan.RawShuffle =>
-            kernelCounts(flat, cells, raw = true, countName)
-          case HistogramPlan.Auto => throw new IllegalStateException("resolved")
-        }
+          else kernelCounts(flat, cells, countName)
         counted.select(decode :+ col(countName): _*)
       case None =>
-        require(plan == HistogramPlan.Auto || plan == HistogramPlan.Classic,
-          s"plan $plan needs the flat bin key, but this cube's cell count " +
-            "overflows the Long key space; use Auto or Classic")
         val idxCols = axes.map(ax => binIndex(ax).as(idxName(ax)))
         // null index ⇔ out of range on that axis ⇔ drop the event
         val keep = axes.map(ax => col(idxName(ax)).isNotNull).reduce(_ && _)
@@ -154,17 +146,14 @@ object Binning {
     }
   }
 
-  /** The primitive count paths over the flat-key frame (see
-    * [[HistogramPlan]] for the strategy trade-offs and measurements).
-    * `raw = false` is the skew-safe two-phase form: open-hash combine per
-    * map task, exchange pre-combined `(cell, count)` rows, open-hash
-    * merge; `raw = true` exchanges raw keys and counts once on the
-    * reduce side.
+  /** The two-phase kernel count over the flat-key frame: open-hash
+    * combine per map task, exchange the pre-combined `(cell, count)`
+    * rows, open-hash merge, at a merge width sized from the cube and the
+    * frame's row estimate.
     */
   private def kernelCounts(
       flat: DataFrame,
       cells: Long,
-      raw: Boolean,
       countName: String,
   ): DataFrame = {
     val spark = flat.sparkSession
@@ -209,7 +198,7 @@ object Binning {
     // the native whole-operator form (graft.plans.CountByKey): counts
     // UnsafeRows directly — no DeserializeToObject/SerializeFromObject
     // boundary on the event-mass passes
-    graft.plans.CountByKey(flat, p, twoPhase = !raw, countName)
+    graft.plans.CountByKey(flat, p, countName)
   }
 
   /** The fused flat-key bin-index column (see [[FlatBinIndexExpr]]). */
@@ -238,16 +227,16 @@ object Binning {
     * input file / per category cubes in one aggregation. Pass e.g.
     * `input_file_name()` or any categorical column.
     *
-    * By default the classic Catalyst plan: the [[HistogramPlan.Kernel]]
-    * path needs a single Long key, and the part column is an arbitrary
-    * type whose exact value must survive (hashing it to 64 bits could
-    * merge two categories). With `partBounds = Some((lo, hi))` and an
-    * INTEGRAL part column, the part id is folded into the flat Long key
-    * as a synthetic leading axis (`key = (part − lo) · cells + flat` —
-    * exact: the uniform axis has delta = 1 and integral inputs sit at
-    * bin centers), so a huge per-part cube (per-file × 100³) routes
-    * through the same [[HistogramPlan.Auto]] kernel machinery as
-    * [[histogram]] instead of paying the double UnsafeRow hash pass.
+    * By default the classic Catalyst plan: the kernel count path needs a
+    * single Long key, and the part column is an arbitrary type whose
+    * exact value must survive (hashing it to 64 bits could merge two
+    * categories). With `partBounds = Some((lo, hi))` and an INTEGRAL part
+    * column, the part id is folded into the flat Long key as a synthetic
+    * leading axis (`key = (part − lo) · cells + flat` — exact: the uniform
+    * axis has delta = 1 and integral inputs sit at bin centers), so a huge
+    * per-part cube (per-file × 100³) routes through [[histogram]]'s
+    * cube-size routing to the kernel instead of paying the double
+    * UnsafeRow hash pass.
     * Folded-path divergences from the classic plan (documented contract):
     * rows whose part id is NULL or outside `[lo, hi]` are DROPPED — the
     * same posture as out-of-range axis values — where the classic plan
@@ -361,7 +350,8 @@ object Binning {
     * takes over above (1.7× at 2²²·³, growing with cells since the dense
     * buffer merge is O(cells) per task while the kernel's exchange
     * carries only filled cells). 2²¹ sits at the measured break-even.
-    * Reproduce with `runMain graft.BinProbe crossover`.
+    * The sweep's protocol is NOTES.md's round-14 crossover entry
+    * ("Dense-path crossover re-measured").
     */
   def histogramCube(
       df: DataFrame,

@@ -1,68 +1,46 @@
 package graft.binning
 
-/** Physical strategy for the sparse N-D histogram's count aggregation
-  * (see [[Binning.histogram]]).
-  *
-  * The decision variable is the map-side combining factor: Catalyst's
-  * partial HashAggregate only pays for itself when a map task sees each
-  * live cell many times, and a map task's row count is BOUNDED
-  * (`spark.sql.files.maxPartitionBytes` ⇒ ~1–4 M rows) no matter how big
-  * the corpus is. So for cube cardinalities past ~10⁵ cells the partial
-  * aggregate combines almost nothing — every row pays two UnsafeRow hash
-  * passes (partial + final) for a ≤ few-% shuffle reduction. Measured at
-  * the reference shape (1e8 rows, 80 map tasks, local[20]; min of 3
-  * interleaved reps, one JVM per cell count — the full protocol and
-  * table are in NOTES.md round-12):
-  *
-  *   cells      classic   kernel    rawShuffle
-  *   1e4        0.87 s    0.91 s    2.37 s
-  *   1.05e5     2.08 s    1.84 s    2.87 s
-  *   1e6        5.04 s    3.86 s    3.28 s
-  *   9.8e6      6.57 s    5.19 s    4.11 s
-  *   1e8        8.2-10.5  6.32 s    5.45 s
-  *
-  * [[HistogramPlan.Kernel]] (the ≥ 2¹⁷-cell default) stays exactly as
-  * skew-safe as the classic plan — a hot cell still collapses to one row
-  * per map task before the exchange — while replacing both UnsafeRow
-  * hash aggregations with one primitive open-addressing pass per side.
-  * [[HistogramPlan.RawShuffle]] is ~25 % faster again but ships raw
-  * events keyed by cell, so a single hot cell (a bright diffraction spot,
-  * a stuck detector pixel) funnels its entire event mass through ONE
-  * reduce task — opt-in only, for data known to be smooth.
-  */
-sealed trait HistogramPlan
-object HistogramPlan {
-
-  /** Route by cube cardinality: ≥ [[HistogramKernel.kernelCellsFloor]]
-    * cells → [[Kernel]], else [[Classic]]. */
-  case object Auto extends HistogramPlan
-
-  /** Catalyst partial + final HashAggregate on the flat key — optimal
-    * when the cube is small enough for strong map-side combining. */
-  case object Classic extends HistogramPlan
-
-  /** Two-phase primitive count: per-map-task open-hash combine, shuffle
-    * the pre-combined `(cell, count)` rows, open-hash merge per reduce
-    * task. Same shuffle volume and skew behavior as [[Classic]]. */
-  case object Kernel extends HistogramPlan
-
-  /** Single-pass: shuffle raw flat keys, one open-hash count per reduce
-    * task. Fastest on smooth data; NOT skew-safe (see class doc). */
-  case object RawShuffle extends HistogramPlan
-}
-
-/** Primitive long→long open-addressing count maps used by the
-  * [[HistogramPlan.Kernel]] / [[HistogramPlan.RawShuffle]] physical
-  * paths. Fibonacci-multiplier hashing, linear probing, ×2 growth at ¾
-  * load; allocation-free per row.
+/** Primitive long→long open-addressing count maps behind the native
+  * count-by-key operator ([[graft.plans.CountByKey]]) that
+  * [[Binning.histogram]] routes large cubes through. Fibonacci-multiplier
+  * hashing, linear probing, ×2 growth at ¾ load; allocation-free per row.
   */
 object HistogramKernel {
 
-  /** [[HistogramPlan.Auto]] switches to the kernel plan at this cube
-    * cardinality — the measured classic↔kernel crossover (see
-    * [[HistogramPlan]] scaladoc table) sits near 1e5 cells (the two are
-    * within ~10 % there; classic clearly wins at 1e4, kernel from 1e6
-    * up), so 2¹⁷ is a conservative switch point. */
+  /** [[Binning.histogram]] counts a flattenable cube of at least this many
+    * cells with the two-phase kernel (per-map-task open-hash combine, the
+    * packed `(cell, count)` exchange, open-hash merge per reduce task);
+    * smaller cubes use a plain `groupBy` on the flat key.
+    *
+    * The decision variable is the map-side combining factor: Catalyst's
+    * partial HashAggregate only pays for itself when a map task sees each
+    * live cell many times, and a map task's row count is BOUNDED
+    * (`spark.sql.files.maxPartitionBytes` ⇒ ~1–4 M rows) no matter how big
+    * the corpus is. So for cube cardinalities past ~10⁵ cells the partial
+    * aggregate combines almost nothing — every row pays two UnsafeRow hash
+    * passes (partial + final) for a ≤ few-% shuffle reduction. Measured at
+    * the reference shape (1e8 rows, 80 map tasks, local[20]; min of 3
+    * interleaved reps, one JVM per cell count — the full protocol and
+    * table are in NOTES.md round-12):
+    *
+    *   cells      classic   kernel    raw
+    *   1e4        0.87 s    0.91 s    2.37 s
+    *   1.05e5     2.08 s    1.84 s    2.87 s
+    *   1e6        5.04 s    3.86 s    3.28 s
+    *   9.8e6      6.57 s    5.19 s    4.11 s
+    *   1e8        8.2-10.5  6.32 s    5.45 s
+    *
+    * `classic` is the `groupBy` plan, `kernel` the two-phase count. The
+    * kernel stays exactly as skew-safe as classic — a hot cell still
+    * collapses to one row per map task before the exchange — while
+    * replacing both UnsafeRow hash aggregations with one primitive pass
+    * per side. `raw` (shipping raw keys and counting once after the
+    * exchange) was ~25 % faster again but funneled a hot cell's entire
+    * event mass through ONE reduce task, so it is not offered. The
+    * classic↔kernel crossover sits near 1e5 cells (within ~10 % there;
+    * classic clearly wins at 1e4, the kernel from 1e6 up), so 2¹⁷ is a
+    * conservative switch point.
+    */
   val kernelCellsFloor: Long = 1L << 17
 
   /** Hard capacity ceiling: past 2³⁰ slots the ×2 growth would overflow
@@ -98,8 +76,7 @@ object HistogramKernel {
           if (cap >= maxCap) {
             if (size >= maxCap - (maxCap >> 4)) throw new IllegalStateException(
               s"count map exceeded ~$size live keys in one task; raise " +
-                "spark.sql.shuffle.partitions (merge side) or lower the " +
-                "partial flush bound")
+                "spark.sql.shuffle.partitions (the merge width)")
             // else: stop growing; linear probing stays correct
           } else {
             grow() // moves every entry, including k (with its count so far)
@@ -134,10 +111,10 @@ object HistogramKernel {
   }
 
   /** Partial-pass flush bound (live entries per map-task count map). The
-    * bounded-rows-per-map-task argument in this file's scaladoc holds for
-    * file scans (`maxPartitionBytes` ⇒ ~1–4 M rows/task) but NOT for
-    * cached / repartitioned / computed upstreams, whose partitions can be
-    * arbitrarily large — without a bound a huge non-scan partition OOMs
+    * bounded-rows-per-map-task argument in [[kernelCellsFloor]]'s scaladoc
+    * holds for file scans (`maxPartitionBytes` ⇒ ~1–4 M rows/task) but NOT
+    * for cached / repartitioned / computed upstreams, whose partitions can
+    * be arbitrarily large — without a bound a huge non-scan partition OOMs
     * where the classic HashAggregate would have spilled. 2²² entries ≈
     * 143 MB of map (17 B/slot at ¾ load) per in-flight task; flushing
     * emits the map's contents and resets — DUPLICATE keys across flushes
@@ -194,25 +171,7 @@ object HistogramKernel {
       }
     }
 
-  /** Count occurrences of each key (the local-combine / raw-count pass).
-    * Dataset-level form, used by probes/specs; the product plan runs
-    * [[countInternalRows]] through [[graft.plans.CountByKeyExec]], which
-    * skips the object boundary entirely.
-    */
-  def countKeys(it: Iterator[Long]): Iterator[(Long, Long)] = {
-    val m = new LongCountMap(1 << 16)
-    while (it.hasNext) m.add(it.next(), 1L)
-    m.result()
-  }
-
-  /** Sum pre-combined `(key, count)` rows (the merge pass). */
-  def mergeCounts(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val m = new LongCountMap(1 << 16)
-    while (it.hasNext) { val kv = it.next(); m.add(kv._1, kv._2) }
-    m.result()
-  }
-
-  /** Reduce-side partition count for the kernel/raw exchanges: the
+  /** Reduce-side partition count for the kernel's exchange: the
     * session's `spark.sql.shuffle.partitions`, auto-raised so the merge
     * map stays ≲ 256 MB per task (17 B/entry), capped at 4096 — callers
     * with genuinely larger live-cell counts should size

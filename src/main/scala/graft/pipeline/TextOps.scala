@@ -181,7 +181,9 @@ object TextOps {
         "n_chars_m" -> length(t),
         "avg_token_len" ->
           (length(regexp_replace(t, "\\s+", "")).cast("double") / nTokens),
-        "punct_ratio" -> (punctCount(t).cast("double") / length(t)),
+        // null on "" like DuckDB's x / 0 (ANSI division would throw)
+        "punct_ratio" ->
+          when(length(t) =!= 0, punctCount(t).cast("double") / length(t)),
         "stopword_ratio" -> (nStop.cast("double") / nTokens),
       ))
       .drop("_q")

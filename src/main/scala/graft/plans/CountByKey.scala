@@ -12,35 +12,30 @@ import org.apache.spark.sql.types.LongType
 
 import graft.binning.HistogramKernel
 
-/** Native count-by-Long-key: the whole-operator Catalyst form of
-  * [[graft.binning.HistogramPlan.Kernel]] / `RawShuffle`.
+/** Native count-by-Long-key: the whole-operator Catalyst form of the
+  * two-phase kernel count [[graft.binning.Binning.histogram]] routes cubes
+  * of ≥ [[graft.binning.HistogramKernel.kernelCellsFloor]] cells through.
   *
-  * The Dataset form (`as[Long].mapPartitions(countKeys)`) pays a
+  * A Dataset form (`as[Long].mapPartitions(…)`) would pay a
   * `DeserializeToObject` / `SerializeFromObject` boundary on EVERY row of
   * BOTH kernel passes — ~2×10⁸ boxed `java.lang.Long`s at the reference
   * shape, pure allocator traffic. This operator consumes the child's
   * UnsafeRows directly: a logical node ([[CountByKeyPlan]]), a planner
   * strategy ([[CountByKeyStrategy]], registered per-session through
-  * `spark.experimental.extraStrategies`), and a physical exec
-  * ([[CountByKeyExec]]) whose FINAL side declares
-  * `ClusteredDistribution(key)` so `EnsureRequirements` inserts the one
-  * hash exchange — Spark's own machinery places and reuses the shuffle
-  * like a built-in aggregate's. The exchange width is pinned to
-  * [[graft.binning.HistogramKernel.mergePartitions]]'s sizing
-  * (`requiredNumPartitions`), which intentionally takes AQE's
-  * post-shuffle coalescing out of the loop: the merge map's memory is
-  * the constraint, not the partition byte size AQE optimizes for.
-  *
-  * Two-phase form (skew-safe, the default): partial exec counts each map
-  * partition's rows, the exchange moves pre-combined `(key, cnt)` rows,
-  * the final exec merges. Single-phase form (`twoPhase = false` — the
-  * RawShuffle opt-in): the final exec alone, counting raw keys after the
-  * exchange.
+  * `spark.experimental.extraStrategies`), and physical execs: the partial
+  * [[CountByKeyExec]] counts each map partition's rows, the
+  * [[PackedCountExchangeExec]] moves the pre-combined `(key, cnt)` rows,
+  * and the final [[CountByKeyExec]] merges them. The final side declares
+  * `ClusteredDistribution(key)`, which the packed exchange's hash
+  * partitioning satisfies. The exchange width is pinned to
+  * [[graft.binning.HistogramKernel.mergePartitions]]'s sizing, which
+  * intentionally takes AQE's post-shuffle coalescing out of the loop: the
+  * merge map's memory is the constraint, not the partition byte size AQE
+  * optimizes for.
   */
 final case class CountByKeyPlan(
     child: LogicalPlan,
     numPartitions: Int,
-    twoPhase: Boolean,
     cnt: AttributeReference, // constructor arg: `copy` (analyzer/optimizer
                              // child rewrites) must PRESERVE the exprId the
                              // parent plan already resolved against
@@ -77,29 +72,20 @@ final case class CountByKeyPlan(
     copy(child = c)
 }
 
-/** Plans [[CountByKeyPlan]] into one or two [[CountByKeyExec]]s, joined
-  * by the narrow-wire [[PackedCountExchangeExec]] (varint pairs instead
-  * of framed UnsafeRows — same placement, ~5× fewer shuffle bytes at the
-  * high-cardinality cube shape). `spark.graft.countByKey.packedExchange`
-  * = false falls back to the classic EnsureRequirements exchange.
+/** Plans [[CountByKeyPlan]] into partial [[CountByKeyExec]] → the
+  * narrow-wire [[PackedCountExchangeExec]] (varint pairs instead of framed
+  * UnsafeRows — same placement, ~5× fewer shuffle bytes at the
+  * high-cardinality cube shape) → final [[CountByKeyExec]].
   */
 object CountByKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case c: CountByKeyPlan =>
-      val inner =
-        if (c.twoPhase)
-          CountByKeyExec(partial = true, c.key, c.cnt, c.numPartitions,
-            planLater(c.child))
-        else planLater(c.child)
-      val packed = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.countByKey.packedExchange", "true")
-        .toBoolean
-      val mid =
-        if (packed)
-          PackedCountExchangeExec(c.key, c.cnt, c.numPartitions, inner)
-        else inner
+      val partial = CountByKeyExec(partial = true, c.key, c.cnt,
+        c.numPartitions, planLater(c.child))
+      val exchange =
+        PackedCountExchangeExec(c.key, c.cnt, c.numPartitions, partial)
       CountByKeyExec(partial = false, c.key, c.cnt, c.numPartitions,
-        mid) :: Nil
+        exchange) :: Nil
     case _ => Nil
   }
 
@@ -113,9 +99,9 @@ object CountByKeyStrategy extends SparkStrategy {
 
 /** Physical open-hash count. `partial = true` counts raw keys with no
   * distribution requirement (runs inside the map stage); the final side
-  * requires `ClusteredDistribution(key)` (the planner inserts the hash
-  * exchange) and either merges pre-combined rows (two-phase) or counts
-  * raw keys (single-phase — its child emits 1-column rows).
+  * requires `ClusteredDistribution(key)` and merges the pre-combined
+  * `(key, cnt)` rows. The plan string prints `partial` first and
+  * `numPartitions` last — the form benchmark tooling parses.
   */
 final case class CountByKeyExec(
     partial: Boolean,
@@ -138,22 +124,14 @@ final case class CountByKeyExec(
       requiredNumPartitions = Some(numPartitions)))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    // merge pre-combined (key, cnt) rows only when the child actually
-    // emits them (the final side of the two-phase form)
-    val cntOrdinal = if (!partial && child.output.size == 2) 1 else -1
+    val cntOrdinal = if (partial) -1 else 1
     // the PARTIAL map flushes at a bounded entry count so a huge
     // non-scan partition (cached/repartitioned upstream) can't OOM the
     // map task — duplicates across flushes merge in the final pass. The
     // FINAL side must stay unbounded (one output row per key); its map is
     // sized by HistogramKernel.mergePartitions' exchange width instead.
     val flush =
-      if (partial) conf.getConfString("spark.graft.countByKey.flushEntries",
-        HistogramKernel.partialFlushEntries.toString).toInt
-      else Int.MaxValue
-    // fail misconfiguration HERE (driver side, once) — inside the task
-    // iterator it would burn 4 retry attempts per task first
-    require(flush > 0,
-      s"spark.graft.countByKey.flushEntries must be positive: $flush")
+      if (partial) HistogramKernel.partialFlushEntries else Int.MaxValue
     child.execute().mapPartitions { it =>
       val counted = HistogramKernel.countInternalRows(it, cntOrdinal, flush)
       val proj = UnsafeProjection.create(Array(LongType, LongType): Array[org.apache.spark.sql.types.DataType])
@@ -172,17 +150,16 @@ final case class CountByKeyExec(
 
 object CountByKey {
 
-  /** `(key, cnt)` DataFrame counting `flat`'s single Long column —
-    * two-phase (skew-safe) or single-phase raw-shuffle. The strategy is
-    * registered on the session on first use.
+  /** `(key, cnt)` DataFrame counting `flat`'s single Long column with the
+    * two-phase kernel. The strategy is registered on the session on first
+    * use.
     */
-  def apply(flat: DataFrame, numPartitions: Int, twoPhase: Boolean,
-      cntName: String): DataFrame = {
+  def apply(flat: DataFrame, numPartitions: Int, cntName: String): DataFrame = {
     val spark = flat.sparkSession
     CountByKeyStrategy.register(spark)
     val keyName = flat.columns.head
     val df = GraftBridge.ofRows(spark, CountByKeyPlan(
-      GraftBridge.analyzedPlan(flat), numPartitions, twoPhase,
+      GraftBridge.analyzedPlan(flat), numPartitions,
       AttributeReference(cntName, LongType, nullable = false)()))
     // hide the node's produced `cnt` behind a Project alias:
     // DeduplicateRelations knows how to regenerate conflicting Project

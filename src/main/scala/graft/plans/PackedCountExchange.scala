@@ -41,9 +41,6 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * LongType key — so the declared `outputPartitioning` is truthful and
   * the final merge sees exactly the distribution the classic plan
   * produced. Row VALUES are unchanged; only bytes-on-the-wire shrink.
-  * `spark.graft.countByKey.packedExchange` (default true) falls back to
-  * the classic EnsureRequirements exchange when false — the A/B the
-  * parity spec pins.
   */
 final case class PackedCountExchangeExec(
     key: Attribute,
@@ -64,19 +61,14 @@ final case class PackedCountExchangeExec(
     HashPartitioning(Seq(key), numPartitions)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    // two-phase child emits pre-combined (key, cnt); the raw single-phase
-    // child emits bare key rows, shipped key-only and read back as
-    // (key, 1) — still narrower and merged identically by the final exec
-    val hasCnt = child.output.size == 2
     val n = numPartitions
-    val shuffled = org.apache.spark.sql.GraftShuffleBridge.rowShuffle(
-      child.execute(), n, new PackedCountRowSerializer(hasCnt),
+    org.apache.spark.sql.GraftShuffleBridge.rowShuffle(
+      child.execute(), n, new PackedCountRowSerializer,
       r => {
         val h = Murmur3_x86_32.hashLong(r.getLong(0), 42)
         val m = h % n
         if (m < 0) m + n else m
       })
-    shuffled
   }
 
   override protected def withNewChildInternal(c: SparkPlan): PackedCountExchangeExec =
@@ -84,17 +76,15 @@ final case class PackedCountExchangeExec(
 }
 
 /** Shuffle serializer for count rows: `(key, cnt)` as two zigzag varints
-  * per record (`hasCnt = false` ships bare-key rows and reads back
-  * `(key, 1)`). Each record's bytes are self-contained, so serialized
+  * per record. Each record's bytes are self-contained, so serialized
   * records can be relocated (enables the serialized-sort shuffle
   * writer). Deserialized rows are REUSED — the exchange's consumer (the
   * final count merge) reads each row before pulling the next, the
   * standard exchange-output contract.
   */
-final class PackedCountRowSerializer(hasCnt: Boolean)
-    extends Serializer with Serializable {
+final class PackedCountRowSerializer extends Serializer with Serializable {
   override def newInstance(): SerializerInstance =
-    new PackedCountRowSerializer.Instance(hasCnt)
+    new PackedCountRowSerializer.Instance
   override def supportsRelocationOfSerializedObjects: Boolean = true
 }
 
@@ -114,7 +104,7 @@ object PackedCountRowSerializer {
     i + 1
   }
 
-  private final class Instance(hasCnt: Boolean) extends SerializerInstance {
+  private final class Instance extends SerializerInstance {
 
     override def serializeStream(out: OutputStream): SerializationStream =
       new SerializationStream {
@@ -124,8 +114,8 @@ object PackedCountRowSerializer {
         override def writeKey[T: ClassTag](key: T): SerializationStream = this
         override def writeValue[T: ClassTag](value: T): SerializationStream = {
           val r = value.asInstanceOf[InternalRow]
-          var len = writeVarLong(buf, 0, r.getLong(0))
-          if (hasCnt) len = writeVarLong(buf, len, r.getLong(1))
+          val keyEnd = writeVarLong(buf, 0, r.getLong(0))
+          val len = writeVarLong(buf, keyEnd, r.getLong(1))
           out.write(buf, 0, len) // one bulk write per record
           this
         }
@@ -143,12 +133,15 @@ object PackedCountRowSerializer {
         private val buf = new Array[Byte](1 << 16)
         private var pos = 0
         private var limit = 0
-        /** -1 at clean end-of-stream, else the next unsigned byte. */
+        /** -1 at clean end-of-stream, else the next unsigned byte. Only
+          * a -1 read ends the stream: a read of 0 bytes is retried, so the
+          * records after it are never dropped. */
         private def readByte(): Int = {
-          if (pos == limit) {
-            limit = in.read(buf)
+          while (pos == limit) {
+            val got = in.read(buf)
+            if (got < 0) return -1
             pos = 0
-            if (limit <= 0) return -1
+            limit = got
           }
           val b = buf(pos) & 0xFF
           pos += 1
@@ -168,7 +161,6 @@ object PackedCountRowSerializer {
           (z >>> 1) ^ -(z & 1L)
         }
         private val row = new SpecificInternalRow(Seq(LongType, LongType))
-        if (!hasCnt) row.setLong(1, 1L)
 
         override def asKeyValueIterator: Iterator[(Any, Any)] =
           new Iterator[(Any, Any)] {
@@ -178,11 +170,9 @@ object PackedCountRowSerializer {
               val first = readByte()
               if (first < 0) { done = true; nextRow = null; return }
               row.setLong(0, readVarLong(first))
-              if (hasCnt) {
-                val b = readByte()
-                if (b < 0) throw new EOFException("truncated record")
-                row.setLong(1, readVarLong(b))
-              }
+              val b = readByte()
+              if (b < 0) throw new EOFException("truncated record")
+              row.setLong(1, readVarLong(b))
               nextRow = row
             }
             override def hasNext: Boolean = {

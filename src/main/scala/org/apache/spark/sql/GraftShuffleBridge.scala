@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.{Partition, PartitionIdPassthrough, ShuffleDependency, SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.serializer.Serializer
+import org.apache.spark.shuffle.sort.SortShuffleManager
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.util.MutablePair
 
@@ -26,6 +27,21 @@ object GraftShuffleBridge {
       numPartitions: Int,
       ser: Serializer,
       pidOf: InternalRow => Int): RDD[InternalRow] = {
+    // the map side hands the shuffle writer a reused pair holding the
+    // child's reused row, which is safe only while every record is
+    // serialized before the next is pulled: the bypass-merge and
+    // serialized (UnsafeShuffleWriter) writers do that, while the
+    // SortShuffleWriter fallback buffers the objects, so every buffered
+    // record would read back as the last row pulled. Spark falls back to
+    // it past the serialized mode's partition cap or with a
+    // non-relocatable serializer.
+    val cap = SortShuffleManager.MAX_SHUFFLE_OUTPUT_PARTITIONS_FOR_SERIALIZED_MODE
+    require(numPartitions <= cap,
+      s"row shuffle width $numPartitions exceeds the serialized shuffle's " +
+        s"$cap-partition cap; lower spark.sql.shuffle.partitions")
+    require(ser.supportsRelocationOfSerializedObjects,
+      "row shuffle needs a serializer that supports relocation of " +
+        "serialized objects")
     val withPid: RDD[Product2[Int, InternalRow]] = child.mapPartitions({ it =>
       val pair = new MutablePair[Int, InternalRow]()
       it.map(r => pair.update(pidOf(r), r))

@@ -150,8 +150,8 @@ class BinningProperties extends SparkSpec {
     }
   }
 
-  test("LongCountMap: countKeys/mergeCounts match a reference map under " +
-      "adversarial keys (40 cases)") {
+  test("LongCountMap: countInternalRows count and merge passes match a " +
+      "reference map under adversarial keys (40 cases)") {
     // hand-rolled property test: random key streams with duplicates and
     // the hash's worst friends — 0, ±1, Long.Min/Max, dense sequential
     // runs (clustered under multiply-shift), keys differing only in
@@ -168,15 +168,23 @@ class BinningProperties extends SparkSpec {
       }
       keys
     }.foreach { keys =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+      def row(vs: Any*): InternalRow = new GenericInternalRow(vs.toArray)
+      // the count pass (cntOrdinal -1) over bare key rows
+      def countPass(ks: Seq[Long]) =
+        HistogramKernel.countInternalRows(ks.iterator.map(row(_)), -1).toSeq
       val expect = keys.groupMapReduce(identity)(_ => 1L)(_ + _)
-      val counted = HistogramKernel.countKeys(keys.iterator).toSeq
+      val counted = countPass(keys)
       assert(counted.map(_._1).distinct.size === counted.size, "dup keys out")
       assert(counted.toMap === expect)
-      // split into 7 chunks, count each, merge the pre-combined rows —
-      // must equal the one-pass count (the kernel's two-phase contract)
+      // split into 7 chunks, count each, merge the pre-combined rows with
+      // the merge pass (cntOrdinal 1) — must equal the one-pass count (the
+      // kernel's two-phase contract)
       val chunks = keys.grouped(math.max(1, keys.size / 7)).toSeq
-      val partials = chunks.flatMap(c => HistogramKernel.countKeys(c.iterator))
-      val merged = HistogramKernel.mergeCounts(partials.iterator).toMap
+      val partials = chunks.flatMap(countPass)
+      val merged = HistogramKernel.countInternalRows(
+        partials.iterator.map { case (k, c) => row(k, c) }, 1).toMap
       assert(merged === expect)
     }
   }

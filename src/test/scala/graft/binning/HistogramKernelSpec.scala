@@ -5,10 +5,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The primitive count paths behind [[HistogramPlan.Kernel]] /
-  * [[HistogramPlan.RawShuffle]]: value parity against the classic
-  * Catalyst plan (including skewed and edge-key inputs), the auto
-  * routing rule, and the physical plan shapes.
+/** The two-phase count kernel behind [[Binning.histogram]]'s large-cube
+  * route: value parity against a plain per-axis `groupBy` reference
+  * (including skewed and edge-key inputs), the cube-size routing rule,
+  * and the physical plan shapes.
   */
 class HistogramKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -26,10 +26,23 @@ class HistogramKernelSpec extends SparkSpec {
       .map(r => Seq.tabulate(r.length - 1)(r.getLong) -> r.getLong(r.length - 1))
       .toMap
 
+  /** The reference cube: a plain per-axis `groupBy` over
+    * [[Binning.binIndex]], without the flat key or the kernel. */
+  private def reference(df: DataFrame, axes: Seq[BinAxis]): Map[Seq[Long], Long] = {
+    val idx = axes.map(ax => Binning.binIndex(ax).as(Binning.idxName(ax)))
+    asMap(df.select(idx: _*).na.drop()
+      .groupBy(axes.map(ax => col(Binning.idxName(ax))): _*).count())
+  }
+
   // 4 small axes (2·3·5·7 = 210 cells) with NaN / out-of-range rows mixed in
   private val axes = Seq(
     UniformAxis("a", 2, 0.0, 2.0), UniformAxis("b", 3, 0.0, 3.0),
     UniformAxis("c", 5, 0.0, 5.0), UniformAxis("d", 7, 0.0, 7.0))
+  // the same ranges at 20·30·50·70 = 2.1e6 cells ≥ kernelCellsFloor, so
+  // the histogram takes the kernel route
+  private val kernelAxes = Seq(
+    UniformAxis("a", 20, 0.0, 2.0), UniformAxis("b", 30, 0.0, 3.0),
+    UniformAxis("c", 50, 0.0, 5.0), UniformAxis("d", 70, 0.0, 7.0))
   private lazy val events = {
     val r = new scala.util.Random(7)
     Seq.tabulate(5000) { i =>
@@ -42,41 +55,46 @@ class HistogramKernelSpec extends SparkSpec {
     }.toDF("a", "b", "c", "d").repartition(7)
   }
 
-  test("kernel and rawShuffle match the classic plan cell-for-cell") {
-    val classic = asMap(Binning.histogram(events, axes, plan = HistogramPlan.Classic))
-    val kernel = asMap(Binning.histogram(events, axes, plan = HistogramPlan.Kernel))
-    val raw = asMap(Binning.histogram(events, axes, plan = HistogramPlan.RawShuffle))
-    assert(classic.nonEmpty && classic.values.sum > 0)
-    assert(kernel === classic)
-    assert(raw === classic)
+  test("kernel matches the per-axis groupBy reference cell-for-cell") {
+    val h = Binning.histogram(events, kernelAxes)
+    assert(planOf(h).contains("CountByKey"), planOf(h))
+    val want = reference(events, kernelAxes)
+    assert(want.nonEmpty && want.values.sum > 0)
+    assert(asMap(h) === want)
   }
 
   test("parity holds on a single hot cell (the skew case)") {
     val hot = Seq.fill(3000)((0.4, 0.4, 0.4, 0.4)) ++
       Seq.tabulate(50)(i => (1.0, 2.0, (i % 5).toDouble, (i % 7).toDouble))
     val df = hot.toDF("a", "b", "c", "d").repartition(5)
-    val classic = asMap(Binning.histogram(df, axes, plan = HistogramPlan.Classic))
-    val kernel = asMap(Binning.histogram(df, axes, plan = HistogramPlan.Kernel))
-    assert(kernel === classic)
-    assert(classic(Seq(0L, 0L, 0L, 0L)) === 3000L)
+    val h = Binning.histogram(df, kernelAxes)
+    assert(planOf(h).contains("CountByKey"), planOf(h))
+    val want = reference(df, kernelAxes)
+    assert(asMap(h) === want)
+    assert(want(Seq(4L, 4L, 4L, 4L)) === 3000L)
   }
 
   test("flat key 0 (first cell) survives map growth in both kernel passes") {
     // enough distinct keys to force several LongCountMap growths past the
     // 2^16 initial capacity, with key 0 present — the growth re-find must
     // not lose it (an unused slot has keys(i)==0 too)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val n = 200000
-    val keys = spark.range(n).select((col("id") % (n / 2)).as("_flat")).as[Long]
-    // countKeys runs per partition → sum the per-partition outputs by key
-    val counted = keys.mapPartitions(HistogramKernel.countKeys).collect()
-      .groupMapReduce(_._1)(_._2)(_ + _)
+    def row(vs: Any*): InternalRow = new GenericInternalRow(vs.toArray)
+    // the count pass over 4 chunks, as the partial exec runs per partition
+    val partials = (0 until n).grouped(n / 4).flatMap(chunk =>
+      HistogramKernel.countInternalRows(
+        chunk.iterator.map(i => row((i % (n / 2)).toLong)), -1)).toSeq
+    val counted = partials.groupMapReduce(_._1)(_._2)(_ + _)
     assert(counted.size === n / 2)
     assert(counted(0L) === 2L)
     assert(counted.values.sum === n.toLong)
-    val merged = keys.mapPartitions(HistogramKernel.countKeys)
-      .repartition(col("_1"))
-      .mapPartitions(HistogramKernel.mergeCounts).collect().toMap
-    assert(merged === counted)
+    // the merge pass over the pre-combined rows, as the final exec runs
+    val merged = HistogramKernel.countInternalRows(
+      partials.iterator.map { case (k, c) => row(k, c) }, 1).toSeq
+    assert(merged.map(_._1).distinct.size === merged.size, "dup keys out")
+    assert(merged.toMap === counted)
   }
 
   test("auto routes by cube cardinality at kernelCellsFloor") {
@@ -95,6 +113,12 @@ class HistogramKernelSpec extends SparkSpec {
     assert(p.contains("PackedCountExchange"), p)
     assert(!p.contains("HashAggregate"), p)
     assert(!p.contains("SerializeFromObject") && !p.contains("DeserializeToObject"), p)
+    // the final exec's line ends with the merge width (the form the
+    // benchmark's plan reader parses)
+    val width = """(?m)CountByKey false,.*, (\d+)\s*$""".r
+      .findFirstMatchIn(p).map(_.group(1).toInt)
+    assert(width === Some(HistogramKernel.mergePartitions(spark,
+      hugeAxes.map(_.nBins.toLong).product)), p)
     assert(asMap(routed) === Map(Seq(1L, 2L, 3L, 4L) -> 100L))
   }
 
@@ -116,36 +140,13 @@ class HistogramKernelSpec extends SparkSpec {
   }
 
   test("kernel plan shuffles exactly once, on the pre-combined rows") {
-    val df = Binning.histogram(events, axes, plan = HistogramPlan.Kernel)
+    val df = Binning.histogram(events, kernelAxes)
     val p = planOf(df)
     // the one exchange is the packed narrow-wire one; no classic
     // UnsafeRow exchange remains in the kernel plan
     assert("PackedCountExchange".r.findAllIn(p).length === 1, p)
     assert("Exchange hashpartitioning".r.findAllIn(p).length === 0, p)
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"), p)
-  }
-
-  test("packed exchange == classic exchange, cell-for-cell (both phases)") {
-    // conf fallback A/B: same kernel/raw plans with the classic
-    // EnsureRequirements exchange must produce identical cubes — the
-    // packed exchange changes bytes-on-the-wire, never values or
-    // placement (murmur3-exact partitioner)
-    def run(plan: HistogramPlan) = asMap(Binning.histogram(events, axes,
-      plan = plan))
-    val (kernelPacked, rawPacked) =
-      (run(HistogramPlan.Kernel), run(HistogramPlan.RawShuffle))
-    spark.conf.set("spark.graft.countByKey.packedExchange", "false")
-    try {
-      val kernelClassic = run(HistogramPlan.Kernel)
-      val rawClassic = run(HistogramPlan.RawShuffle)
-      assert(kernelPacked === kernelClassic)
-      assert(rawPacked === rawClassic)
-      // and the fallback really is the classic exchange
-      val p = planOf(Binning.histogram(events, axes,
-        plan = HistogramPlan.Kernel))
-      assert(!p.contains("PackedCountExchange"), p)
-      assert(p.contains("ENSURE_REQUIREMENTS"), p)
-    } finally spark.conf.unset("spark.graft.countByKey.packedExchange")
   }
 
   test("packed row serializer: zigzag varint roundtrip on edge longs") {
@@ -155,37 +156,48 @@ class HistogramKernelSpec extends SparkSpec {
     val pairs = Seq(0L, 1L, -1L, 63L, 64L, 127L, 128L, -128L, 300L,
       Int.MaxValue.toLong, Int.MinValue.toLong, 1L << 40, -(1L << 40),
       Long.MaxValue, Long.MinValue).map(k => (k, k ^ 0x5DEECE66DL))
-    for (hasCnt <- Seq(true, false)) {
-      val bos = new java.io.ByteArrayOutputStream()
-      val ser = new PackedCountRowSerializer(hasCnt).newInstance()
-      val ss = ser.serializeStream(bos)
-      val w = new SpecificInternalRow(Seq(LongType, LongType))
-      pairs.foreach { case (k, c) =>
-        w.setLong(0, k); w.setLong(1, c)
-        ss.writeKey(0).writeValue(w)
-      }
-      ss.close()
-      // small magnitudes really are small on the wire (0, 1, -1 → 1 byte)
-      assert(bos.toByteArray.length < pairs.length * 21)
-      val ds = ser.deserializeStream(
-        new java.io.ByteArrayInputStream(bos.toByteArray))
-      val got = ds.asKeyValueIterator.map { case (_, r) =>
+    val bos = new java.io.ByteArrayOutputStream()
+    val ser = new PackedCountRowSerializer().newInstance()
+    val ss = ser.serializeStream(bos)
+    val w = new SpecificInternalRow(Seq(LongType, LongType))
+    pairs.foreach { case (k, c) =>
+      w.setLong(0, k); w.setLong(1, c)
+      ss.writeKey(0).writeValue(w)
+    }
+    ss.close()
+    val bytes = bos.toByteArray
+    // small magnitudes really are small on the wire (0, 1, -1 → 1 byte)
+    assert(bytes.length < pairs.length * 21)
+    def readAll(in: java.io.InputStream) =
+      ser.deserializeStream(in).asKeyValueIterator.map { case (_, r) =>
         val row = r.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
         (row.getLong(0), row.getLong(1)) // copy before next() reuses it
       }.toList
-      val want = if (hasCnt) pairs else pairs.map { case (k, _) => (k, 1L) }
-      assert(got === want, s"hasCnt=$hasCnt")
+    assert(readAll(new java.io.ByteArrayInputStream(bytes)) === pairs)
+    // a read of 0 bytes is not end of stream: a source that returns 0
+    // before every real read and serves at most 1 byte per read still
+    // yields every pair
+    val stingy = new java.io.InputStream {
+      private val under = new java.io.ByteArrayInputStream(bytes)
+      private var zeroNext = true
+      override def read(): Int = under.read()
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        zeroNext = !zeroNext
+        if (!zeroNext) 0 else under.read(b, off, math.min(len, 1))
+      }
     }
+    assert(readAll(stingy) === pairs)
   }
 
-  test("explicit kernel/rawShuffle on an unflattenable cube is rejected") {
-    val giant = Seq.tabulate(4)(_ =>
-      UniformAxis("a", 2000000000, 0.0, 1.0)) // 1.6e37 cells > Long
-    intercept[IllegalArgumentException] {
-      Binning.histogram(events.select(col("a")), giant.take(4).zipWithIndex.map {
-        case (ax, i) => ax.copy(column = Seq("a", "b", "c", "d")(i))
-      }, plan = HistogramPlan.Kernel)
+  test("row shuffle past the serialized-mode partition cap is rejected") {
+    // past 2^24 partitions Spark would pick SortShuffleWriter, which
+    // buffers the reused rows the row shuffle hands it
+    val e = intercept[IllegalArgumentException] {
+      org.apache.spark.sql.GraftShuffleBridge.rowShuffle(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
+        (1 << 24) + 1, new graft.plans.PackedCountRowSerializer, _ => 0)
     }
+    assert(e.getMessage.contains("spark.sql.shuffle.partitions"), e.getMessage)
   }
 
   test("partial flush bounds the map and duplicates merge to exact counts") {
@@ -199,20 +211,32 @@ class HistogramKernelSpec extends SparkSpec {
     assert(out.size > 10, s"flush never triggered: ${out.size}") // epochs > 1
     val summed = out.groupMapReduce(_._1)(_._2)(_ + _)
     assert(summed === (0L until 10L).map(_ -> 100L).toMap)
-    // end-to-end through the native operator on a non-scan upstream:
-    // parity with classic under a forced-tiny flush bound
-    spark.conf.set("spark.graft.countByKey.flushEntries", "4")
-    try {
-      val classic = asMap(Binning.histogram(events, axes, plan = HistogramPlan.Classic))
-      val kernel = asMap(Binning.histogram(events, axes, plan = HistogramPlan.Kernel))
-      assert(kernel === classic)
-    } finally spark.conf.unset("spark.graft.countByKey.flushEntries")
+    // end-to-end through the native operator: one partition of
+    // 2^22 + 2^20 rows over 2^22 + 2^19 distinct keys. The partial map
+    // reaches the flush bound after the first 2^22 keys, then counts the
+    // rest in a second epoch that repeats keys < 2^19; the final merge
+    // must still sum each key exactly
+    val distinct = (1L << 22) + (1L << 19)
+    val df = spark.range(0L, (1L << 22) + (1L << 20), 1L, 1)
+      .select((col("id") % distinct).cast("double").as("k"))
+    val ax = UniformAxis("k", distinct.toInt, 0.0, distinct.toDouble)
+    HistogramKernel.maxMapEntries.set(0L)
+    val byGroup = Binning.histogram(df, Seq(ax))
+      .groupBy((col("bin_k") < (1L << 19)).as("repeated"))
+      .agg(min("cnt"), max("cnt"), count(lit(1)))
+      .collect().map(r => r.getBoolean(0) -> (r.getLong(1), r.getLong(2),
+        r.getLong(3))).toMap
+    assert(HistogramKernel.maxMapEntries.get ===
+      HistogramKernel.partialFlushEntries.toLong)
+    assert(byGroup === Map(
+      true -> (2L, 2L, 1L << 19),
+      false -> (1L, 1L, 1L << 22)))
   }
 
   test("nullable key columns are rejected (null would count as key 0)") {
     val nullable = Seq[java.lang.Long](1L, null, 2L).toDF("k")
     val e = intercept[IllegalArgumentException] {
-      graft.plans.CountByKey(nullable, 4, twoPhase = true, "cnt").collect()
+      graft.plans.CountByKey(nullable, 4, "cnt").collect()
     }
     assert(e.getMessage.contains("non-nullable"))
   }
@@ -238,12 +262,9 @@ class HistogramKernelSpec extends SparkSpec {
         UniformAxis("c", 10000, 0.0, 1.0)))
     val p = planOf(h)
     assert(p.contains("CountByKey"), p)
-    // merge width: last arg of the packed exchange node (classic-exchange
-    // fallback keeps the hashpartitioning form)
-    val widths = ("hashpartitioning\\([^)]*, (\\d+)\\)".r
-      .findAllMatchIn(p).map(_.group(1).toInt) ++
-      "PackedCountExchange .*, (\\d+)".r
-        .findAllMatchIn(p).map(_.group(1).toInt)).toSeq
+    // merge width: last arg of the packed exchange node
+    val widths = "PackedCountExchange .*, (\\d+)".r
+      .findAllMatchIn(p).map(_.group(1).toInt).toSeq
     assert(widths.nonEmpty, p)
     val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val bound = math.max(base,

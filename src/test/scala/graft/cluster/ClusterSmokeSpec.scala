@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
-import graft.binning.{Binning, HistogramPlan}
+import graft.binning.Binning
 import graft.{loader => gl}
 import graft.pipeline
 
@@ -95,17 +95,16 @@ class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.collect().map { r =>
         (0 until 4).map(r.getLong) -> r.getLong(4)
       }.toMap
-    val kernel = key(Binning.histogram(li, SparkEntry.ax4dHuge,
-      plan = HistogramPlan.Kernel))
-    val classic = key(Binning.histogram(li, SparkEntry.ax4dHuge,
-      plan = HistogramPlan.Classic))
+    // 1e8 cells: the cube alone routes it through the kernel
+    val kernel = key(Binning.histogram(li, SparkEntry.ax4dHuge))
+    // reference: a plain per-axis groupBy over the bin indices
+    val idx = SparkEntry.ax4dHuge.map(ax =>
+      Binning.binIndex(ax).as(Binning.idxName(ax)))
+    val classic = key(li.select(idx: _*).na.drop()
+      .groupBy(SparkEntry.ax4dHuge.map(ax => col(Binning.idxName(ax))): _*)
+      .count())
     assert(kernel.nonEmpty)
     assert(kernel === classic)
-    // the raw-shuffle variant serializes bare keys instead of
-    // pre-combined maps — different wire format, same cells
-    val raw = key(Binning.histogram(li, SparkEntry.ax4dHuge,
-      plan = HistogramPlan.RawShuffle))
-    assert(raw === classic)
   }
 
   test("TypedImperativeAggregate (TopKAgg) serialize/merge across" +

@@ -71,14 +71,12 @@ class TokenStatsExprSpec extends SparkSpec {
   test("qualityColumns over the kernel matches the declarative struct form") {
     // end-to-end parity of the published columns, including the ratio
     // arithmetic, against the pre-kernel formulation
-    // no empty text here: punct_ratio divides by length(t), which throws
-    // under ANSI for "" in BOTH formulations (pre-existing contract);
-    // the kernel-level parity tests above cover "" directly
     val docs = Seq(
       (1L, "the quick brown fox jumped over a lazy dog"),
       (2L, "x"), (3L, "   "), (4L, null.asInstanceOf[String]),
       (5L, "this is, that is; and THIS IS."),
       (6L, "\tpunct! (lots) [of] {it}: \"quoted\" - end.\t"),
+      (7L, ""),
     ).toDF("doc_id", "text")
     val got = TextOps.qualityColumns(docs, "text")
     val toks = split(trim(col("text")), "\\s+")
@@ -91,8 +89,9 @@ class TokenStatsExprSpec extends SparkSpec {
         "n_chars_m" -> length(col("text")),
         "avg_token_len" -> (length(regexp_replace(col("text"), "\\s+", ""))
           .cast("double") / col("_q.n_tokens")),
-        "punct_ratio" -> (TextOps.punctCount(col("text")).cast("double") /
-          length(col("text"))),
+        "punct_ratio" -> when(length(col("text")) =!= 0,
+          TextOps.punctCount(col("text")).cast("double") /
+            length(col("text"))),
         "stopword_ratio" ->
           (col("_q.n_stop").cast("double") / col("_q.n_tokens")),
       )).drop("_q")
@@ -100,5 +99,7 @@ class TokenStatsExprSpec extends SparkSpec {
     val g = got.orderBy("doc_id").collect().toSeq
     val w = want.orderBy("doc_id").collect().toSeq
     assert(g === w)
+    val empty = g.find(_.getAs[Long]("doc_id") == 7L).get
+    assert(empty.isNullAt(empty.fieldIndex("punct_ratio")))
   }
 }
