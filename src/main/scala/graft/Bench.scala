@@ -14,14 +14,15 @@ import graft.dfops.DfOps
 /** Round benchmark: headline workloads mirroring the reference's benchmark
   * suite (`benchmarks/benchmark_sed.py`, see BASELINE.md) plus the pipeline
   * extensions, on `SPARK_GRAFT_SF_DIR`. Prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"value_1x":N,"unit":"sec","queries":{...},"sf":...}`.
   *
   * Since round 19 the query map also carries a ×100 SCALE LEG (`_x100`
   * suffixed names, `SPARK_GRAFT_XSCALE` to resize/disable): four
   * shuffle-heavy workloads re-run on ×100 inflated inputs so the
   * cpu-count scaling comparison measures parallelism instead of
   * task-launch floors. Adding entries is contract-allowed; it inflates
-  * `value`, so cross-round TOTALS are comparable only over shared names.
+  * `value`, so cross-round totals compare on `value_1x`, the sum of the
+  * ×1 minima alone.
   *
   * Timing discipline (the protocol of the round-12 histogram-strategy
   * table in NOTES.md, promoted here after round 12 proved the old
@@ -625,6 +626,8 @@ object Bench {
       s""""queries":${jmap(rs, _.min)},"medians":${jmap(rs, _.median)},"spreads":${jmap(rs, _.spread)},"agreed_spreads":${jmap(rs, _.agreedSpread)},"canaries":${jmap(rs, _.cpuCanary)},"bw_canaries":${jmap(rs, _.bwCanary)},"shuffle_mb":${jmap(rs, _.shuffleMb)},"quiet_reps":${jmapi(rs, _.quietReps)},"agreed_reps":${jmapi(rs, _.agreedReps)},"contaminated":${jlist(r.contaminated)},"unusable":${jlist(r.unusable)},"extra_rounds":${r.extraRounds}"""
     }
     val total = results1xAll.map(_.min).sum
+    // name-stable headline: the ×1 minima alone, without the `_x100` leg
+    val total1x = r1x.stats.map(_.min).sum
     val canarySec = results1xAll.map(_.cpuCanary).min
     val bwCanarySec = results1xAll.map(_.bwCanary).min
     val x10Part = if (x10Results.isEmpty) "" else {
@@ -647,7 +650,7 @@ object Bench {
     val unusableAll =
       (r1xAll.unusable.map("1x:" + _) ++ rX10.unusable.map("x10:" + _))
     val (usable, exitCode) = BenchProtocol.verdict(unusableAll, quiet)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",${legJson(r1xAll)},"canary_sec":$canarySec,"bw_canary_sec":$bwCanarySec,"run_quiet":$quiet,"quiet_cpu_ref":$quietCpuCanarySec,"quiet_bw_ref":$quietBwCanarySec,"usable":$usable,"inverted_1x":${jlist(inverted1x)},"xscale_factor":$xsFactor$x10Part,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"value_1x":$total1x,"unit":"sec",${legJson(r1xAll)},"canary_sec":$canarySec,"bw_canary_sec":$bwCanarySec,"run_quiet":$quiet,"quiet_cpu_ref":$quietCpuCanarySec,"quiet_bw_ref":$quietBwCanarySec,"usable":$usable,"inverted_1x":${jlist(inverted1x)},"xscale_factor":$xsFactor$x10Part,"sf":"$sfDir"}"""
     emitArtifact(json, sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json"))
     spark.stop()
     if (exitCode == 3) {

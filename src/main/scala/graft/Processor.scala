@@ -148,7 +148,9 @@ class Processor(
     this
   }
 
-  /** T8 `apply_momentum_correction` via a broadcast inverse field. */
+  /** T8 `apply_momentum_correction` via a broadcast inverse field; the
+    * event and timed tables look up the same broadcast pair.
+    */
   def applyMomentumCorrection(
       invDfield: Array[Array[Array[Double]]],
       detectorRanges: ((Double, Double), (Double, Double)),
@@ -156,7 +158,7 @@ class Processor(
       newX: String = "Xm", newY: String = "Ym",
   ): this.type = {
     onBoth(Seq(xColumn, yColumn))(
-      Momentum.applyDfield(spark, _, invDfield, xColumn, yColumn, newX, newY, detectorRanges))
+      Momentum.dfieldCorrection(spark, invDfield, xColumn, yColumn, newX, newY, detectorRanges))
     metadata.add(Map("applied" -> true), "momentum_correction", "overwrite")
     this
   }

@@ -62,7 +62,24 @@ object Momentum {
       newXColumn: String,
       newYColumn: String,
       detectorRanges: ((Double, Double), (Double, Double)),
-  ): DataFrame = {
+  ): DataFrame =
+    dfieldCorrection(spark, invDfield, xColumn, yColumn, newXColumn,
+      newYColumn, detectorRanges)(df)
+
+  /** [[applyDfield]] as a reusable transform: the two field broadcasts are
+    * built once, here, and every frame the returned function is applied
+    * to looks up the same pair (the event and timed tables of one
+    * Processor share them instead of shipping the fields twice).
+    */
+  def dfieldCorrection(
+      spark: SparkSession,
+      invDfield: Array[Array[Array[Double]]], // [2][rows][cols]
+      xColumn: String,
+      yColumn: String,
+      newXColumn: String,
+      newYColumn: String,
+      detectorRanges: ((Double, Double), (Double, Double)),
+  ): DataFrame => DataFrame = {
     require(invDfield.length == 2)
     // the codegen'd interp indexes (r0+1, c0+1) unconditionally — a
     // degenerate field must get the named error (rows checked before
@@ -80,16 +97,15 @@ object Momentum {
     val yOff = detectorRanges._2._1
 
     import org.apache.spark.sql.GraftBridge
-    def lookup(field: Int): Column = {
-      val flat: Broadcast[Array[Double]] =
-        spark.sparkContext.broadcast(invDfield(field).flatten)
+    val grids: Seq[Broadcast[Array[Double]]] =
+      invDfield.toSeq.map(f => spark.sparkContext.broadcast(f.flatten))
+    def lookup(field: Int): Column =
       GraftBridge.column(BilinearGridLookup(
         GraftBridge.expression(col(xColumn).cast("double")),
         GraftBridge.expression(col(yColumn).cast("double")),
-        flat, rows, cols, xOff, xScale, yOff, yScale))
-    }
+        grids(field), rows, cols, xOff, xScale, yOff, yScale))
 
-    df.withColumns(Map(
+    df => df.withColumns(Map(
       newXColumn -> lookup(0),
       newYColumn -> lookup(1),
     ))

@@ -94,10 +94,30 @@ object GenericLoader extends Loader {
     naturalSort(all)
   }
 
-  /** S1 `GenericLoader.read_dataframe`: parquet/csv/json scan of an
-    * explicit path list (order preserved). A `file_id` column materializes
-    * the file sequence and `seq` a per-file row index — the stable global
-    * ordering the window-based fills require (SURVEY.md §7.4 risk 3).
+  /** S1 `GenericLoader.read_dataframe`: scan an explicit list of parquet,
+    * csv or json files into one frame.
+    *
+    * Parquet is planned as ONE scan: a single `spark.read.parquet(paths: _*)`
+    * over every file, so Spark runs one schema-inference job and the
+    * physical plan holds one `FileSourceScanExec`, not a `Union` of one
+    * scan per file. Spark takes that schema from a single file's footer
+    * and would null-fill or drop the columns of any file that disagrees,
+    * so the driver first reads every file's footer (row groups skipped)
+    * and requires the same column names with the same parquet types in
+    * every file, in any column order. The first file that differs from
+    * the first path's fails the read with an IllegalArgumentException
+    * naming that file and its columns. Columns come out in the first
+    * path's order.
+    *
+    * Without `withOrdering`, row order follows Spark's packing of the
+    * files into scan partitions, not the order of `paths`. With it, a
+    * `file_id` column holds each row's index in `paths` and `seq` a row
+    * index rising within each file — the stable global ordering the
+    * window-based fills require (SURVEY.md §7.4 risk 3). For that parquet
+    * keeps one frame per file, each reading with the single scan's schema
+    * (no per-file inference job). csv and json always read each file on
+    * its own, since their inference scans the data, and union the frames
+    * by name.
     */
   def read(
       spark: SparkSession,
@@ -106,21 +126,74 @@ object GenericLoader extends Loader {
       withOrdering: Boolean = false,
   ): DataFrame = {
     require(paths.nonEmpty, "No valid files or folders found!")
-    val readOne: String => DataFrame = ftype match {
-      case "parquet" => p => spark.read.parquet(p)
-      case "csv"     => p => spark.read.option("header", "true").option("inferSchema", "true").csv(p)
-      case "json"    => p => spark.read.json(p)
-      case other     => throw new IllegalArgumentException(s"Unknown file type: $other")
+    def perFile(readOne: String => DataFrame): DataFrame =
+      paths.zipWithIndex.map { case (p, i) =>
+        val df = readOne(p)
+        if (withOrdering)
+          df.withColumn("file_id", lit(i))
+            .withColumn("seq", monotonically_increasing_id())
+        else df
+      }.reduce(_.unionByName(_))
+    ftype match {
+      case "parquet" =>
+        val columns = sameParquetColumns(spark, paths)
+        val scan = spark.read.parquet(paths: _*)
+        // partition columns of a directory path follow the file columns
+        val order = columns ++ scan.columns.filterNot(columns.toSet)
+        val inOrder =
+          if (scan.columns.toSeq == order) scan
+          else scan.select(order.map(c => scan.col(quoted(c))): _*)
+        if (withOrdering) perFile(spark.read.schema(inOrder.schema).parquet(_))
+        else inOrder
+      case "csv" =>
+        perFile(spark.read.option("header", "true").option("inferSchema", "true").csv(_))
+      case "json" => perFile(spark.read.json(_))
+      case other  => throw new IllegalArgumentException(s"Unknown file type: $other")
     }
-    // UNION ALL of per-file frames in the given order (S3's da.concatenate)
-    val parts = paths.zipWithIndex.map { case (p, i) =>
-      val df = readOne(p)
-      if (withOrdering)
-        df.withColumn("file_id", lit(i))
-          .withColumn("seq", monotonically_increasing_id())
-      else df
+  }
+
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
+  /** The column contract of [[read]]'s single parquet scan: every data file
+    * under `paths` (a path may be a file, a directory or a glob) has the
+    * same top-level column names with the same parquet types as the first
+    * one, in any order. Returns the first file's column names in order.
+    * Paths that match nothing are left to the scan, which names them.
+    */
+  private def sameParquetColumns(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    def dataFiles(fs: FileSystem, p: Path): Seq[Path] =
+      Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+        if (!st.isDirectory) Seq(st.getPath)
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+          .flatMap(c => dataFiles(fs, c.getPath))
+      }
+    val files = paths.flatMap { p =>
+      val hp = new Path(p)
+      dataFiles(hp.getFileSystem(conf), hp)
     }
-    parts.reduce(_.unionByName(_))
+    @annotation.nowarn("cat=deprecation")
+    def columnsOf(f: Path): Seq[org.apache.parquet.schema.Type] =
+      ParquetFileReader.readFooter(conf, f, SKIP_ROW_GROUPS)
+        .getFileMetaData.getSchema.getFields.asScala.toSeq
+    def show(cols: Seq[org.apache.parquet.schema.Type]): String =
+      cols.map(_.toString.replaceAll("\\s+", " ").trim).mkString("[", ", ", "]")
+    files.headOption.fold(Seq.empty[String]) { first =>
+      val want = columnsOf(first)
+      files.tail.foreach { f =>
+        val got = columnsOf(f)
+        if (got.sortBy(_.getName) != want.sortBy(_.getName))
+          throw new IllegalArgumentException(
+            s"GenericLoader.read needs the same parquet columns in every file: " +
+              s"$f has ${show(got)}, but $first has ${show(want)}")
+      }
+      want.map(_.getName)
+    }
   }
 
   override def readDataframe(

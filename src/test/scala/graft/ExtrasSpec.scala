@@ -8,7 +8,7 @@ import graft.binning.{BinnedCube, UniformAxis}
 import graft.config.SedConfig
 import graft.export.Tiff
 
-class ExtrasSpec extends SparkSpec {
+class ExtrasSpec extends SparkSpec with FixtureReport {
 
   test("Tiff round trip: 2-D image and 3-D stack") {
     val dir = Files.createTempDirectory("tiff").toFile.getPath
@@ -273,7 +273,7 @@ class ExtrasSpec extends SparkSpec {
       " parse → emit → parse cycle") {
     val ref = java.nio.file.Paths.get(
       "/root/reference/sed/config/mpes_example_config.yaml")
-    assume(Files.exists(ref), "reference config not present")
+    assumeFixture(ref.toString, "reference config not present")
     val cfg = SedConfig.parse(ref)
     val back = graft.config.YamlShim.parse(graft.config.YamlShim.emit(cfg))
     assert(back === cfg)
@@ -286,7 +286,7 @@ class ExtrasSpec extends SparkSpec {
     // must handle, not just the flat mpes layout
     val flash = java.nio.file.Paths.get(
       "/root/reference/sed/config/flash_example_config.yaml")
-    assume(Files.exists(flash), "reference config not present")
+    assumeFixture(flash.toString, "reference config not present")
     val f = SedConfig.parse(flash)
     assert(SedConfig.getString(f, "core.loader") === "flash")
     assert(SedConfig.getString(f,
@@ -300,7 +300,7 @@ class ExtrasSpec extends SparkSpec {
       "dataframe.channels.dldAux.dldAuxChannels").isDefined)
     val sxp = java.nio.file.Paths.get(
       "/root/reference/sed/config/sxp_example_config.yaml")
-    assume(Files.exists(sxp), "reference config not present")
+    assumeFixture(sxp.toString, "reference config not present")
     val s = SedConfig.parse(sxp)
     assert(SedConfig.getString(s, "core.loader") === "sxp")
     assert(SedConfig.node(s, "dataframe.channels").isDefined)
@@ -312,7 +312,7 @@ class ExtrasSpec extends SparkSpec {
   test("YAML shim parses the reference's real mpes example config") {
     val ref = java.nio.file.Paths.get(
       "/root/reference/sed/config/mpes_example_config.yaml")
-    assume(Files.exists(ref), "reference config not present")
+    assumeFixture(ref.toString, "reference config not present")
     val cfg = SedConfig.parse(ref)
     assert(SedConfig.getString(cfg, "core.loader") === "mpes")
     assert(SedConfig.getString(cfg, "dataframe.hdf5_aliases.Stream_0") === "X")

@@ -8,7 +8,7 @@ import graft.binning.{BinnedCube, Binning, UniformAxis}
 import graft.export.CubeIO
 import graft.loader.Hdf5Minimal
 
-class ProcessorSpec extends SparkSpec {
+class ProcessorSpec extends SparkSpec with FixtureReport {
 
   private def events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 
@@ -35,6 +35,24 @@ class ProcessorSpec extends SparkSpec {
     // metadata provenance recorded along the chain
     assert(p.metadata.get.keySet.intersect(
       Set("jitter", "energy_correction", "energy_calibration", "delay_calibration")).size === 4)
+  }
+
+  test("momentum correction broadcasts the inverse field once for both" +
+      " tables") {
+    val base = spark.range(16).select(
+      col("id").cast("double").as("X"), (col("id") * 0.5).as("Y"))
+    val field = Array.tabulate(2, 4, 4)((f, r, c) => f + r * 0.1 + c * 0.01)
+    val p = new Processor(spark, base, Some(base))
+      .applyMomentumCorrection(field, ((0.0, 16.0), (0.0, 16.0)))
+    def gridIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case l: calibrate.BilinearGridLookup => l.bcGrid.id
+      })).toSet
+    val ids = gridIds(p.dataframe)
+    assert(ids.size === 2)
+    assert(gridIds(p.timed.get) === ids)
+    assert(p.timed.get.select("Xm", "Ym").collect() ===
+      p.dataframe.select("Xm", "Ym").collect())
   }
 
   test("SparkEntry.entry produces a non-empty flagship result") {
@@ -528,7 +546,7 @@ class ProcessorSpec extends SparkSpec {
     // value-identical to loading the fixture directly
     import java.nio.file.{Files, Paths}
     val fixturePath = "/root/reference/tests/data/loader/mpes/Scan0030_2.h5"
-    assume(new java.io.File(fixturePath).exists())
+    assumeFixture(fixturePath)
     val h5 = Files.readAllBytes(Paths.get(fixturePath))
     val zipBytes = {
       val bos = new java.io.ByteArrayOutputStream()

@@ -32,7 +32,8 @@ import graft.pipeline
   * the shared SparkSpec session is `local[4]`, and `getOrCreate` cannot
   * change an existing context's master.
   */
-class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll
+    with graft.FixtureReport {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sfDir/lineitem.parquet").exists()
@@ -65,7 +66,7 @@ class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    if (haveData) spark.stop()
+    try super.afterAll() finally if (haveData) spark.stop()
 
   /** Distinct executor-process names (`pid@host`) a 16-partition job
     * actually ran on — proves multi-JVM execution, not just multi-slot
@@ -160,7 +161,8 @@ class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       " (eager driver-local spill is gated off)") {
     val flashPath = "/root/reference/tests/data/loader/flash/" +
       "FLASH1_USER3_stream_2_run43878_file1_20230130T153807.1.h5"
-    assume(haveData && new java.io.File(flashPath).exists())
+    assume(haveData)
+    assumeFixture(flashPath)
     // the gate itself: cluster mode refuses the eager path outright
     assert(!gl.ChannelLoader.eagerSmallLoad(spark, Some(1L)))
     val (events, timedOpt) =

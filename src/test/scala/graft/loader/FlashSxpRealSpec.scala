@@ -17,13 +17,12 @@ import org.apache.spark.sql.functions._
   *  - sxp channels are (50 trains × 1000 hits) 2-D datasets keyed by the
   *    `data/trainId` index; zero pads unused entries
   */
-class FlashSxpRealSpec extends SparkSpec {
+class FlashSxpRealSpec extends SparkSpec with graft.FixtureReport {
   import spark.implicits._
 
   private val flashPath = "/root/reference/tests/data/loader/flash/" +
     "FLASH1_USER3_stream_2_run43878_file1_20230130T153807.1.h5"
   private val sxpPath = "/root/reference/tests/data/loader/sxp/RAW-R0016-DA03-S00000.h5"
-  private def exists(p: String) = new java.io.File(p).exists()
 
   private val Dld1 = "uncategorised/FLASH.EXP/HEXTOF.DAQ/DLD1"
 
@@ -32,7 +31,7 @@ class FlashSxpRealSpec extends SparkSpec {
     flat.slice((t * 5 + s) * 2048, (t * 5 + s + 1) * 2048).toSeq
 
   test("real flash fixture: electron index + NaN-drop explode (F1/F2/F5)") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     val root = Hdf5Minimal.read(flashPath)
     val trains = root.dataset(s"$Dld1/index").data.asLongs
     val value = root.dataset(s"$Dld1/value").data.asDoubles
@@ -60,7 +59,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("real flash fixture: dldAux fan-out + assemble events/timed frames") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     val root = Hdf5Minimal.read(flashPath)
     val trains = root.dataset(s"$Dld1/index").data.asLongs
     val value = root.dataset(s"$Dld1/value").data.asDoubles
@@ -105,7 +104,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("real flash fixture: one-call readDataframe builds events + timed") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     val (events, timedOpt) = InstrumentH5Loader.readDataframe(spark, Seq(flashPath))
     val timed = timedOpt.get
     val ev = events.cache()
@@ -126,7 +125,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("eager small-file load: one-scan plan, values identical to lazy") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     // default: single small file loads eagerly — the materialization plan
     // is one parquet-spill scan, no joins/exchanges/windows left to re-run
     val (eager, eagerTimed) = InstrumentH5Loader.readDataframe(spark, Seq(flashPath))
@@ -151,7 +150,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("multi-file load with colliding train ids never cross-joins") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     // two copies of the SAME file = every trainId collides across files;
     // file_id in the join keys must keep them apart (2x events, not x²)
     val dir = java.nio.file.Files.createTempDirectory("flash2").toFile.getPath
@@ -169,7 +168,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("real flash fixture: parquet buffer converts once and reloads") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     val dir = java.nio.file.Files.createTempDirectory("flashbuf").toFile.getPath + "/buf"
     def load() = InstrumentH5Loader.readDataframe(
       spark, Seq(flashPath), InstrumentH5Loader.flashDefaultChannels,
@@ -185,7 +184,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("buffer reuse rejects a different file set of the same size") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     // two copies of the fixture under different names: same channel set,
     // same file COUNT — only the manifest's path mapping can tell them
     // apart (the pre-manifest checks silently served stale data here)
@@ -206,7 +205,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("real sxp fixture: one-call readDataframe with sxp channel geometry") {
-    assume(exists(sxpPath))
+    assumeFixture(sxpPath)
     val (events, timed) = InstrumentH5Loader.readDataframe(
       spark, Seq(sxpPath), InstrumentH5Loader.sxpDefaultChannels,
       pulseChannel = "pulseId", tofChannel = "dldTimeSteps", ubidOffset = 0)
@@ -219,7 +218,7 @@ class FlashSxpRealSpec extends SparkSpec {
   }
 
   test("real sxp fixture: electron index + macrobunch segmentation (S7)") {
-    assume(exists(sxpPath))
+    assumeFixture(sxpPath)
     val root = Hdf5Minimal.read(sxpPath)
     val det = "INSTRUMENT/SXP_TR_XPES/DET/MCP_DETECTOR:output/data"
     val trains = root.dataset(s"$det/trainId").data.asLongs

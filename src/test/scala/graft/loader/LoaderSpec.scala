@@ -1,7 +1,12 @@
 package graft.loader
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -38,6 +43,113 @@ class LoaderSpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> r.getSeq[Int](1).toSet).toMap
     assert(byFile(0) === Set(1, 2))
     assert(byFile(1) === Set(3, 4))
+  }
+
+  /** Four single-file parquet parts of 1000 rows each (ids 1000·i until
+    * 1000·(i+1), in id order); part 2 stores its columns in another order.
+    */
+  private def parquetRun(): Seq[String] = {
+    val dir = Files.createTempDirectory("run").toFile
+    (0 until 4).map { i =>
+      val cols = if (i == 2) Seq("tof", "X", "id") else Seq("id", "X", "tof")
+      val tmp = new java.io.File(dir, s"part$i").getPath
+      spark.range(i * 1000L, (i + 1) * 1000L, 1, 1)
+        .select(col("id"), (col("id") * 0.5).as("X"), (col("id") % 7).cast("int").as("tof"))
+        .select(cols.map(col): _*)
+        .write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val file = new java.io.File(dir, s"events_$i.parquet")
+      Files.move(part.toPath, file.toPath)
+      file.getPath
+    }
+  }
+
+  /** Spark jobs started on this thread while `body` runs. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"loader-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "GenericLoader.read job count")
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.drainListeners(sc)
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("GenericLoader.read: one parquet scan gives the per-file union's rows") {
+    // the first path is the part with the other column order; Spark's scan
+    // takes its schema from the lexicographically first file (part 0), so
+    // this also pins the columns to the first path's order, as the union's
+    val files = parquetRun()
+    val rotated = files.drop(2) ++ files.take(2)
+    val single = GenericLoader.read(spark, rotated)
+    val union = rotated.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    assert(single.columns.toSeq === Seq("tof", "X", "id"))
+    assert(union.columns.toSeq === single.columns.toSeq)
+    def digest(df: DataFrame) = df.select(expr("count(1)"), expr("sum(hash(*))")).first()
+    assert(digest(single) === digest(union))
+    assert(digest(single).getLong(0) === 4000L)
+  }
+
+  test("GenericLoader.read plans one parquet FileSourceScanExec and no Union") {
+    val files = parquetRun()
+    val plan = GenericLoader.read(spark, files).queryExecution.sparkPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size === 1, plan)
+    assert(scans.head.relation.fileFormat.isInstanceOf[ParquetFileFormat])
+    assert(scans.head.relation.location.rootPaths.size === 4)
+    assert(plan.collect { case u: UnionExec => u }.isEmpty, plan)
+  }
+
+  test("GenericLoader.read over 4 parquet files starts exactly one Spark job") {
+    val files = parquetRun()
+    assert(jobsStartedBy(GenericLoader.read(spark, files)) === 1)
+  }
+
+  test("GenericLoader.read names the parquet file whose columns differ") {
+    val files = parquetRun()
+    val odd = Files.createTempDirectory("odd").toString + "/lacks_tof"
+    spark.range(3).select(col("id"), (col("id") * 0.5).as("X")).coalesce(1)
+      .write.parquet(odd)
+    val oddFile = new java.io.File(odd).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    val err = intercept[IllegalArgumentException] {
+      GenericLoader.read(spark, files.take(2) ++ Seq(oddFile) ++ files.drop(2))
+    }
+    assert(err.getMessage.contains(oddFile), err.getMessage)
+    assert(err.getMessage.contains("tof"), err.getMessage)
+    // a wider type for the same name is a different column too
+    val retyped = Files.createTempDirectory("retyped").toString + "/tof_int64"
+    spark.range(3).select(col("id"), (col("id") * 0.5).as("X"), col("id").as("tof"))
+      .write.parquet(retyped)
+    val err2 = intercept[IllegalArgumentException] {
+      GenericLoader.read(spark, files :+ retyped)
+    }
+    assert(err2.getMessage.contains(retyped), err2.getMessage)
+  }
+
+  test("GenericLoader.read(withOrdering) on parquet: file_id is the file's" +
+      " index, seq rises within each file, one Spark job") {
+    val files = parquetRun()
+    var df: DataFrame = null
+    assert(jobsStartedBy { df = GenericLoader.read(spark, files, withOrdering = true) } === 1)
+    assert(df.columns.toSeq === Seq("id", "X", "tof", "file_id", "seq"))
+    val byFile = df.select("file_id", "seq", "id").collect()
+      .groupBy(_.getInt(0)).map { case (f, rs) =>
+        f -> rs.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq
+      }
+    assert(byFile.keySet === Set(0, 1, 2, 3))
+    for ((f, ids) <- byFile) assert(ids === (f * 1000L until (f + 1) * 1000L))
   }
 
   test("electronIndex explodes pulses and enumerates electrons") {

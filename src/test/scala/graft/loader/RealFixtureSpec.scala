@@ -19,17 +19,16 @@ import Hdf5Minimal._
   * Expected values below were extracted from the files with an
   * independent (Python struct) HDF5 walker, not with this reader.
   */
-class RealFixtureSpec extends SparkSpec {
+class RealFixtureSpec extends SparkSpec with graft.FixtureReport {
 
   private val mpesPath = "/root/reference/tests/data/loader/mpes/Scan0030_2.h5"
   private val flashPath = "/root/reference/tests/data/loader/flash/" +
     "FLASH1_USER3_stream_2_run43878_file1_20230130T153807.1.h5"
   private val sxpPath = "/root/reference/tests/data/loader/sxp/RAW-R0016-DA03-S00000.h5"
 
-  private def exists(p: String) = new java.io.File(p).exists()
 
   test("real mpes fixture: chunked streams decode with exact values") {
-    assume(exists(mpesPath))
+    assumeFixture(mpesPath)
     val root = Hdf5Minimal.read(mpesPath)
     assert(root.datasets.map(_.name) === Seq(
       "EventFormat", "Stream_0", "Stream_1", "Stream_2", "Stream_3",
@@ -57,7 +56,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real mpes fixture: channel aliases discovered from Name attrs") {
-    assume(exists(mpesPath))
+    assumeFixture(mpesPath)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(mpesPath))
     val aliases = StreamFixture.groupsAndAliases(bytes)
     assert(aliases === Seq(
@@ -67,7 +66,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real mpes fixture: event table ingests end-to-end through Spark") {
-    assume(exists(mpesPath))
+    assumeFixture(mpesPath)
     val aliases = Seq( // the reference's default mpes channels (X, Y, t, ADC)
       "Stream_0" -> "X", "Stream_1" -> "Y", "Stream_2" -> "t", "Stream_4" -> "ADC")
     val df = StreamFixture.ingest(spark, Seq(mpesPath), aliases).cache()
@@ -85,7 +84,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real mpes fixture: ingestAuto discovers channels like the reference default") {
-    assume(exists(mpesPath))
+    assumeFixture(mpesPath)
     val df = StreamFixture.ingestAuto(spark, Seq(mpesPath))
     assert(df.columns.toSeq === Seq("file_id", "seq", "ts",
       "X", "Y", "t", "MasterRstCtr", "ADC", "State Input"))
@@ -100,7 +99,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real mpes fixture: timed table has one row per ms marker") {
-    assume(exists(mpesPath))
+    assumeFixture(mpesPath)
     val timed = StreamFixture.ingestTimed(
       spark, Seq(mpesPath), Seq("Stream_0" -> "X")).cache()
     try {
@@ -115,7 +114,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real flash fixture: deep group tree and N-D datasets parse") {
-    assume(exists(flashPath))
+    assumeFixture(flashPath)
     val root = Hdf5Minimal.read(flashPath)
     assert(root.childNames.toSet === Set("FL1", "uncategorised", "zraw"))
     val dld = root.dataset(
@@ -131,7 +130,7 @@ class RealFixtureSpec extends SparkSpec {
   }
 
   test("real sxp fixture: CONTROL/INDEX/INSTRUMENT trees parse") {
-    assume(exists(sxpPath))
+    assumeFixture(sxpPath)
     val root = Hdf5Minimal.read(sxpPath)
     assert(root.childNames.toSet === Set("CONTROL", "INDEX", "INSTRUMENT"))
     assert(root.dataset("INDEX/trainId").data.length === 50)

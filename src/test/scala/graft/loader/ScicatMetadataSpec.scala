@@ -15,7 +15,7 @@ import graft.SparkSpec
   * (`readRuns(collectMetadata=true)`, `loader.py:839-846,929`) against
   * the real FLASH HEXTOF fixture.
   */
-class ScicatMetadataSpec extends SparkSpec {
+class ScicatMetadataSpec extends SparkSpec with graft.FixtureReport {
 
   private def serve(handler: HttpExchange => Unit): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -299,7 +299,7 @@ class ScicatMetadataSpec extends SparkSpec {
       " metadata beside the real FLASH frames; =false skips HTTP entirely") {
     val flashPath = "/root/reference/tests/data/loader/flash/" +
       "FLASH1_USER3_stream_2_run43878_file1_20230130T153807.1.h5"
-    assume(new java.io.File(flashPath).exists())
+    assumeFixture(flashPath)
     val dir = java.nio.file.Files.createTempDirectory("scicat_runs")
     java.nio.file.Files.copy(java.nio.file.Paths.get(flashPath),
       dir.resolve("FLASH1_USER3_stream_2_run43878_file1.h5"))
