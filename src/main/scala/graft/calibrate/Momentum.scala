@@ -69,7 +69,10 @@ object Momentum {
   /** [[applyDfield]] as a reusable transform: the two field broadcasts are
     * built once, here, and every frame the returned function is applied
     * to looks up the same pair (the event and timed tables of one
-    * Processor share them instead of shipping the fields twice).
+    * Processor share them instead of shipping the fields twice). The two
+    * fields are flattened and broadcast concurrently, as the driver would
+    * otherwise serialize and compress one 2048² (33.5 MB) grid after the
+    * other.
     */
   def dfieldCorrection(
       spark: SparkSession,
@@ -97,8 +100,9 @@ object Momentum {
     val yOff = detectorRanges._2._1
 
     import org.apache.spark.sql.GraftBridge
+    import scala.collection.parallel.CollectionConverters._
     val grids: Seq[Broadcast[Array[Double]]] =
-      invDfield.toSeq.map(f => spark.sparkContext.broadcast(f.flatten))
+      invDfield.toSeq.par.map(f => spark.sparkContext.broadcast(f.flatten)).seq
     def lookup(field: Int): Column =
       GraftBridge.column(BilinearGridLookup(
         GraftBridge.expression(col(xColumn).cast("double")),

@@ -233,50 +233,56 @@ object Fields {
     // Bucket forward samples by their warped output-grid position, stored
     // as flat primitive arrays via counting sort (two passes) — the naive
     // ArrayBuffer-per-cell layout allocates outRows×outCols×3 buffers,
-    // which dominated the runtime at 2048².
+    // which dominated the runtime at 2048². Pass 1 records each sample's
+    // bucket; pass 2 scatters the samples in row-major order, so every
+    // bucket keeps its samples in that order (the IDW sums depend on it).
     val nBuckets = outRows * outCols
-    val counts = new Array[Int](nBuckets + 1)
-    @inline def bucketOf(wr: Double, wc: Double): Int = {
-      if (wr.isNaN || wc.isNaN) -1
-      else {
-        val br = math.round((wr - rLo) * rScale).toInt
-        val bc = math.round((wc - cLo) * cScale).toInt
-        if (br >= 0 && br < outRows && bc >= 0 && bc < outCols) br * outCols + bc
-        else -1
-      }
-    }
+    val bucket = new Array[Int](rows * cols) // -1: NaN or off the grid
+    // offsets(b + 2) counts bucket b; after the prefix sum offsets(b + 1)
+    // is bucket b's start and its scatter cursor, and once the cursor has
+    // passed every sample of b, bucket b spans offsets(b) until offsets(b + 1)
+    val offsets = new Array[Int](nBuckets + 2)
     var r = 0
     while (r < rows) {
+      val rowR = rdeform(r)
+      val rowC = cdeform(r)
       var c = 0
       while (c < cols) {
-        val b = bucketOf(rdeform(r)(c), cdeform(r)(c))
-        if (b >= 0) counts(b + 1) += 1
+        val wr = rowR(c)
+        val wc = rowC(c)
+        var b = -1
+        if (!wr.isNaN && !wc.isNaN) {
+          val br = math.round((wr - rLo) * rScale).toInt
+          val bc = math.round((wc - cLo) * cScale).toInt
+          if (br >= 0 && br < outRows && bc >= 0 && bc < outCols) {
+            b = br * outCols + bc
+            offsets(b + 2) += 1
+          }
+        }
+        bucket(r * cols + c) = b
         c += 1
       }
       r += 1
     }
-    var i = 0
-    while (i < nBuckets) { counts(i + 1) += counts(i); i += 1 }
-    val offsets = counts // prefix sums; counts(b)..counts(b+1) = bucket b
-    val fill = new Array[Int](nBuckets)
-    val total = offsets(nBuckets)
-    val sampleR = new Array[Double](total)
-    val sampleC = new Array[Double](total)
+    var i = 2
+    while (i <= nBuckets) { offsets(i) += offsets(i - 1); i += 1 }
+    val total = offsets(nBuckets) + offsets(nBuckets + 1)
+    val sampleAt = new Array[Int](total) // r * cols + c of the forward sample
     val sampleW = new Array[Double](total)
     r = 0
     while (r < rows) {
+      val rowR = rdeform(r)
+      val rowC = cdeform(r)
       var c = 0
       while (c < cols) {
-        val wr = rdeform(r)(c)
-        val wc = cdeform(r)(c)
-        val b = bucketOf(wr, wc)
+        val s = r * cols + c
+        val b = bucket(s)
         if (b >= 0) {
-          val pos = offsets(b) + fill(b)
-          fill(b) += 1
-          sampleR(pos) = r.toDouble
-          sampleC(pos) = c.toDouble
-          val dr = wr - (rLo + (b / outCols) / rScale)
-          val dc = wc - (cLo + (b % outCols) / cScale)
+          val pos = offsets(b + 1)
+          offsets(b + 1) = pos + 1
+          sampleAt(pos) = s
+          val dr = rowR(c) - (rLo + (b / outCols) / rScale)
+          val dc = rowC(c) - (cLo + (b % outCols) / cScale)
           sampleW(pos) = dr * dr + dc * dc
         }
         c += 1
@@ -313,8 +319,8 @@ object Fields {
                   val ringD2 = (dr / rScale) * (dr / rScale) + (dc / cScale) * (dc / cScale)
                   while (p < end) {
                     val w = 1.0 / (sampleW(p) + ringD2 + 1e-12)
-                    accR += w * sampleR(p)
-                    accC += w * sampleC(p)
+                    accR += w * (sampleAt(p) / cols).toDouble
+                    accC += w * (sampleAt(p) % cols).toDouble
                     sumW += w
                     p += 1
                   }

@@ -3,6 +3,7 @@ package graft.loader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loader layer (SURVEY.md §2.1): scan instrument data into the event /
   * timed dataframes. With no HDF5 toolchain in the JVM stack, ingestion
@@ -97,27 +98,27 @@ object GenericLoader extends Loader {
   /** S1 `GenericLoader.read_dataframe`: scan an explicit list of parquet,
     * csv or json files into one frame.
     *
-    * Parquet is planned as ONE scan: a single `spark.read.parquet(paths: _*)`
-    * over every file, so Spark runs one schema-inference job and the
-    * physical plan holds one `FileSourceScanExec`, not a `Union` of one
-    * scan per file. Spark takes that schema from a single file's footer
-    * and would null-fill or drop the columns of any file that disagrees,
-    * so the driver first reads every file's footer (row groups skipped)
-    * and requires the same column names with the same parquet types in
-    * every file, in any column order. The first file that differs from
-    * the first path's fails the read with an IllegalArgumentException
-    * naming that file and its columns. Columns come out in the first
-    * path's order.
+    * Parquet is planned as ONE scan over every file, so the physical plan
+    * holds one `FileSourceScanExec`, not a `Union` of one scan per file.
+    * A single-schema scan would null-fill or drop the columns of any file
+    * that disagrees, so the driver first reads every file's footer (row
+    * groups skipped) and requires the same column names with the same
+    * parquet types in every file, in any column order. The first file
+    * that differs from the first path's fails the read with an
+    * IllegalArgumentException naming that file and its columns. The
+    * scan's schema comes from the first file's footer, as Spark's own
+    * inference would derive it from that one file, so no Spark job runs
+    * and columns come out in the first path's order; partition columns
+    * of a directory path follow them.
     *
     * Without `withOrdering`, row order follows Spark's packing of the
     * files into scan partitions, not the order of `paths`. With it, a
     * `file_id` column holds each row's index in `paths` and `seq` a row
     * index rising within each file — the stable global ordering the
     * window-based fills require (SURVEY.md §7.4 risk 3). For that parquet
-    * keeps one frame per file, each reading with the single scan's schema
-    * (no per-file inference job). csv and json always read each file on
-    * its own, since their inference scans the data, and union the frames
-    * by name.
+    * keeps one frame per file, each reading with the single scan's schema.
+    * csv and json always read each file on its own, since their inference
+    * scans the data, and union the frames by name.
     */
   def read(
       spark: SparkSession,
@@ -136,15 +137,11 @@ object GenericLoader extends Loader {
       }.reduce(_.unionByName(_))
     ftype match {
       case "parquet" =>
-        val columns = sameParquetColumns(spark, paths)
-        val scan = spark.read.parquet(paths: _*)
-        // partition columns of a directory path follow the file columns
-        val order = columns ++ scan.columns.filterNot(columns.toSet)
-        val inOrder =
-          if (scan.columns.toSeq == order) scan
-          else scan.select(order.map(c => scan.col(quoted(c))): _*)
-        if (withOrdering) perFile(spark.read.schema(inOrder.schema).parquet(_))
-        else inOrder
+        // no data file: the plain scan names the missing path or schema
+        val scan = footerSchema(spark, paths)
+          .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+        if (withOrdering) perFile(spark.read.schema(scan.schema).parquet(_))
+        else scan
       case "csv" =>
         perFile(spark.read.option("header", "true").option("inferSchema", "true").csv(_))
       case "json" => perFile(spark.read.json(_))
@@ -152,18 +149,21 @@ object GenericLoader extends Loader {
     }
   }
 
-  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
-
-  /** The column contract of [[read]]'s single parquet scan: every data file
-    * under `paths` (a path may be a file, a directory or a glob) has the
+  /** The schema of [[read]]'s single parquet scan. Every data file under
+    * `paths` (a path may be a file, a directory or a glob) must have the
     * same top-level column names with the same parquet types as the first
-    * one, in any order. Returns the first file's column names in order.
-    * Paths that match nothing are left to the scan, which names them.
+    * one, in any order. The schema is built from the first file's footer
+    * as Spark's `ParquetFileFormat.readSchemaFromFooter` builds it: the
+    * Spark schema a Spark writer stored in the footer, else the parquet
+    * schema converted under the session's parquet settings. `None` when
+    * no path holds a data file; the scan then names the path.
     */
-  private def sameParquetColumns(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.FileMetaData
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     def dataFiles(fs: FileSystem, p: Path): Seq[Path] =
@@ -178,21 +178,27 @@ object GenericLoader extends Loader {
       dataFiles(hp.getFileSystem(conf), hp)
     }
     @annotation.nowarn("cat=deprecation")
-    def columnsOf(f: Path): Seq[org.apache.parquet.schema.Type] =
-      ParquetFileReader.readFooter(conf, f, SKIP_ROW_GROUPS)
-        .getFileMetaData.getSchema.getFields.asScala.toSeq
+    def footer(f: Path): FileMetaData =
+      ParquetFileReader.readFooter(conf, f, SKIP_ROW_GROUPS).getFileMetaData
+    def columnsOf(m: FileMetaData): Seq[org.apache.parquet.schema.Type] =
+      m.getSchema.getFields.asScala.toSeq
     def show(cols: Seq[org.apache.parquet.schema.Type]): String =
       cols.map(_.toString.replaceAll("\\s+", " ").trim).mkString("[", ", ", "]")
-    files.headOption.fold(Seq.empty[String]) { first =>
-      val want = columnsOf(first)
+    files.headOption.map { first =>
+      val meta = footer(first)
+      val want = columnsOf(meta)
       files.tail.foreach { f =>
-        val got = columnsOf(f)
+        val got = columnsOf(footer(f))
         if (got.sortBy(_.getName) != want.sortBy(_.getName))
           throw new IllegalArgumentException(
             s"GenericLoader.read needs the same parquet columns in every file: " +
               s"$f has ${show(got)}, but $first has ${show(want)}")
       }
-      want.map(_.getName)
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
     }
   }
 

@@ -418,4 +418,65 @@ class ContractSpec extends SparkSpec {
     assert(!Bench.runQuiet(0.0, 1.0))
     assert(!Bench.runQuiet(1.0, 0.0))
   }
+
+  test("the library entry points the benchmark compiles against keep their types") {
+    // perfbench/ builds against these calls with these argument names and
+    // types; a test suite that compiles only src/ would not notice a change
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.sum
+    import graft.binning.{BinAxis, Binning}
+    import graft.calibrate.Energy
+    import graft.export.CubeIO
+    import graft.fit.Fields
+    import graft.loader.GenericLoader
+    import graft.pipeline.Dedup
+    val tmp = java.nio.file.Files.createTempDirectory("contract").toString
+    val n = 16
+    val detector = ((0.0, n.toDouble), (0.0, n.toDouble))
+    val forward = Array.tabulate(n, n)((r, _) => r + 0.5)
+    val (ir, ic): (Array[Array[Double]], Array[Array[Double]]) =
+      Fields.invertField(forward, forward.transpose, n, n, detector)
+    val inverse: Array[Array[Array[Double]]] = Array(ir, ic)
+
+    Seq.tabulate(40)(i => (i * 0.4, (i * 7 % 40) * 0.4, 3000.0 + i, 2000.0 + 400.0 * i))
+      .toDF("X", "Y", "t", "ADC").coalesce(1).write.parquet(s"$tmp/events")
+    val files: Seq[String] = GenericLoader.gatherFiles(s"$tmp/events", "parquet")
+    val events: DataFrame = GenericLoader.read(spark, files)
+    val chain: Processor = new Processor(spark, events)
+      .addJitter(Seq("X", "Y"), amps = Seq(0.5, 0.5), seed = 7L)
+      .applyMomentumCorrection(inverse, detector, "X", "Y", "Xm", "Ym")
+      .applyMomentumCalibration("Xm", "Ym", rStart = 0.0, cStart = 0.0,
+        rCenter = 8.0, cCenter = 8.0, rConversion = 0.002,
+        cConversion = 0.002, rStep = 1.0, cStep = 1.0)
+      .applyEnergyCorrection(
+        Energy.Correction.spherical(_, _, 8.0, 8.0, 0.05, 4096.0),
+        tofColumn = "t", xColumn = "Xm", yColumn = "Ym", correctedTofColumn = "tm")
+      .appendEnergyAxis("tm", Left((2.4e11, 100.0, 0.5)), binwidth = 2.0, binning = 0)
+      .calibrateDelayAxis("ADC", (2000.0, 20000.0), delayRange = Some((-500.0, 1500.0)))
+    val calibrated: DataFrame = chain.dataframe
+
+    val axes: Seq[UniformAxis] = Seq(UniformAxis("kx", 4, -0.05, 0.05),
+      UniformAxis("delay", 4, -500.0, 1500.0))
+    val idx: Seq[Column] =
+      axes.map(ax => Binning.binIndex(ax: BinAxis).as(Binning.idxName(ax): String))
+    val hist: DataFrame = Binning.histogram(calibrated, axes)
+    CubeIO.writeSparse(hist, axes, s"$tmp/cube"): Unit
+    val (cube, axesJson): (DataFrame, String) = CubeIO.readSparse(spark, s"$tmp/cube")
+    val inRange = calibrated.select(idx: _*).na.drop().count()
+    assert(inRange > 0)
+    assert(cube.select(sum("cnt")).first().getLong(0) === inRange)
+    assert(axesJson.contains("delay"))
+
+    val corpus = Seq.tabulate(30)(i => (i.toLong, s"the quick brown fox ${i % 10} jumps"))
+      .toDF("doc_id", "text")
+    val kept: DataFrame = Dedup.dropExactDuplicates(corpus, "text", "doc_id")
+    val near: DataFrame = Dedup.minhashNearDuplicatesAuto(kept, "text", "doc_id", threshold = 0.5)
+    val sigs: DataFrame = Dedup.minhashSignatures(kept, "text", "doc_id")
+    val bands: DataFrame = Dedup.minhashBands(sigs, 32, 8)
+    assert(kept.count() === 10L)
+    assert(near.select(col("id_a"), col("id_b")).collect()
+      .forall(r => r.getLong(0) < r.getLong(1)))
+    assert(bands.count() === 10L * 8)
+    spark.catalog.clearCache()
+  }
 }

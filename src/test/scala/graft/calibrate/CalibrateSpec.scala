@@ -102,6 +102,50 @@ class CalibrateSpec extends SparkSpec {
     }
   }
 
+  test("applyDfield equals the driver-side bilinear lookup bit for bit on a" +
+      " seeded 64x48 field") {
+    val (rows, cols) = (64, 48)
+    val rnd = new scala.util.Random(4801L)
+    val field = Array.tabulate(2, rows, cols) { (f, r, c) =>
+      if (f == 0) r + 1.5 * math.sin(c / 9.0) + 0.1 * rnd.nextGaussian()
+      else c - 2.0 * math.cos(r / 13.0) + 0.1 * rnd.nextGaussian()
+    }
+    val ranges = ((-3.0, 250.0), (10.0, 110.0))
+    // inside the detector, on its edges and beyond them (edge-clamped)
+    val events = Seq((-3.0, 10.0), (250.0, 110.0), (-40.0, 500.0), (300.0, -7.0)) ++
+      Seq.fill(500)((-20.0 + 290.0 * rnd.nextDouble(), 120.0 * rnd.nextDouble()))
+    val out = Momentum.applyDfield(spark, events.toDF("X", "Y"), field, "X", "Y",
+      "Xm", "Ym", ranges).select("X", "Y", "Xm", "Ym").collect()
+    val xScale = (rows - 1).toDouble / (ranges._1._2 - ranges._1._1)
+    val yScale = (cols - 1).toDouble / (ranges._2._2 - ranges._2._1)
+    val flat = field.map(_.flatten)
+    assert(out.length === events.length)
+    out.foreach { row =>
+      val (x, y) = (row.getDouble(0), row.getDouble(1))
+      val (r, c) = ((x - ranges._1._1) * xScale, (y - ranges._2._1) * yScale)
+      for (f <- 0 to 1) {
+        val want = BilinearGridLookup.interp(flat(f), rows, cols, r, c)
+        val got = row.getDouble(2 + f)
+        assert(java.lang.Double.doubleToRawLongBits(got) ===
+          java.lang.Double.doubleToRawLongBits(want), s"field $f at ($x, $y): $got != $want")
+      }
+    }
+  }
+
+  test("a failing field broadcast surfaces as its own exception") {
+    val df = Seq((1.0, 1.0)).toDF("X", "Y")
+    val good = Array.tabulate(4, 4)((r, c) => r + c * 0.5)
+    // a missing row fails that field's flatten inside its broadcast task
+    val holed = Array.tabulate(4, 4)((r, c) => r - c * 0.5)
+    holed(2) = null
+    for (field <- Seq(Array(good, holed), Array(holed, good))) {
+      val e = intercept[NullPointerException](Momentum.applyDfield(
+        spark, df, field, "X", "Y", "Xm", "Ym", ((0.0, 4.0), (0.0, 4.0))))
+      // thrown where the task failed, not a copy made on the caller's thread
+      assert(e.getCause === null, e)
+    }
+  }
+
   test("momentum workflow: TPS warp → invertField → applyDfield → k-axis " +
     "recovers the ideal symmetric targets (tier-2 integration)") {
     import graft.fit.Fields

@@ -78,6 +78,62 @@ class FieldsSpec extends AnyFunSuite {
     }
   }
 
+  test("invertField equals the reference inversion bit for bit on seeded" +
+      " fields with NaN, off-detector, crowded and empty buckets") {
+    /** A seeded forward field `scale·(r, c)` plus a smooth wobble and
+      * noise; about 1 sample in 20 is NaN and 1 in 20 lies off the detector.
+      */
+    def field(seed: Long, rows: Int, cols: Int, scale: Double): (Fields.Grid, Fields.Grid) = {
+      val rnd = new scala.util.Random(seed)
+      def sample(v: Double): Double = rnd.nextInt(20) match {
+        case 0 => Double.NaN
+        case 1 => v + (if (rnd.nextBoolean()) 1e3 else -1e3)
+        case _ => v + 0.2 * rnd.nextGaussian()
+      }
+      (Array.tabulate(rows, cols)((r, c) => sample(scale * r + 0.7 * math.sin(c / 5.0))),
+        Array.tabulate(rows, cols)((r, c) => sample(scale * c + 0.5 * math.cos(r / 7.0))))
+    }
+    /** Samples per output bucket, bucketed as the inversion buckets them. */
+    def bucketCounts(f: (Fields.Grid, Fields.Grid), outRows: Int, outCols: Int,
+        range: ((Double, Double), (Double, Double))): Array[Int] = {
+      val ((rLo, rHi), (cLo, cHi)) = range
+      val counts = new Array[Int](outRows * outCols)
+      for (r <- f._1.indices; c <- f._1(0).indices) {
+        val (wr, wc) = (f._1(r)(c), f._2(r)(c))
+        if (!wr.isNaN && !wc.isNaN) {
+          val br = math.round((wr - rLo) * ((outRows - 1) / (rHi - rLo))).toInt
+          val bc = math.round((wc - cLo) * ((outCols - 1) / (cHi - cLo))).toInt
+          if (br >= 0 && br < outRows && bc >= 0 && bc < outCols) counts(br * outCols + bc) += 1
+        }
+      }
+      counts
+    }
+    val range = ((0.0, 59.0), (0.0, 43.0))
+    val contracting = field(7L, 60, 44, 0.5) // ~3 samples per bucket and axis
+    val expanding = field(11L, 30, 22, 2.0) // gaps between the samples
+    val nan = Array.fill(6, 5)(Double.NaN) // no sample at all: every cell NaN
+    val cases = Seq(
+      ("contracting", contracting, 40, 31),
+      ("expanding", expanding, 50, 41),
+      ("all NaN", (nan, nan), 9, 7),
+    )
+    assert(bucketCounts(contracting, 40, 31, range).max > 1)
+    assert(bucketCounts(expanding, 50, 41, range).count(_ == 0) > 50 * 41 / 2)
+    for (f <- Seq(contracting, expanding)) {
+      val flat = f._1.flatten ++ f._2.flatten
+      assert(flat.exists(_.isNaN) && flat.exists(v => v < -100 || v > 1000))
+    }
+    for ((name, (rd, cd), outRows, outCols) <- cases) {
+      val (ir, ic) = Fields.invertField(rd, cd, outRows, outCols, range)
+      val (er, ec) = InvertFieldReference.invertField(rd, cd, outRows, outCols, range)
+      assert(ir.length === outRows && ic.length === outRows)
+      for (r <- 0 until outRows) {
+        assert(java.util.Arrays.equals(ir(r), er(r)), s"$name: row $r of the row field")
+        assert(java.util.Arrays.equals(ic(r), ec(r)), s"$name: row $r of the column field")
+      }
+    }
+  }
+
   test("bilinear survives degenerate 1-row / 1-col grids") {
     val row = Array(Array(1.0, 3.0, 5.0)) // 1 x 3
     assert(Fields.bilinear(row, 0.0, 1.0) === 3.0)

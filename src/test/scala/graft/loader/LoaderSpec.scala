@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
 import graft.SparkSpec
 
 class LoaderSpec extends SparkSpec {
@@ -111,9 +112,61 @@ class LoaderSpec extends SparkSpec {
     assert(plan.collect { case u: UnionExec => u }.isEmpty, plan)
   }
 
-  test("GenericLoader.read over 4 parquet files starts exactly one Spark job") {
+  test("GenericLoader.read over 4 parquet files starts no Spark job") {
     val files = parquetRun()
-    assert(jobsStartedBy(GenericLoader.read(spark, files)) === 1)
+    assert(jobsStartedBy(GenericLoader.read(spark, files)) === 0)
+  }
+
+  test("GenericLoader.read's footer schema equals Spark's inferred schema") {
+    def parity(paths: Seq[String]): StructType = {
+      val got = GenericLoader.read(spark, paths).schema
+      assert(got === spark.read.parquet(paths: _*).schema, paths)
+      got
+    }
+    // Spark-written files: the footer carries Spark's own row schema
+    val typed = Files.createTempDirectory("typed").toString
+    val typedFiles = (0 until 2).map { i =>
+      val out = s"$typed/part$i"
+      spark.range(i * 3L, i * 3L + 3, 1, 1).selectExpr(
+        "cast(id as int) as i", "id as l", "id * 0.5 as d", "cast(id as string) as s",
+        "timestamp_seconds(id) as ts", "date_add(date'2024-01-01', cast(id as int)) as dt",
+        "cast(id / 7 as decimal(12, 4)) as dec", "array(id, id + 1) as arr",
+        "named_struct('a', id, 'b', cast(id as string)) as st", "map(cast(id as string), id * 2.0) as m",
+      ).write.parquet(out)
+      new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head.getPath
+    }
+    val sparkWritten = parity(typedFiles)
+    assert(sparkWritten.fieldNames.toSeq ===
+      Seq("i", "l", "d", "s", "ts", "dt", "dec", "arr", "st", "m"))
+    // a plain parquet-hadoop file: no Spark schema in the footer, so the
+    // parquet types convert under the session's parquet settings
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message plain { required int32 a; optional binary raw; optional binary u (UTF8); " +
+        "optional int64 tn (TIMESTAMP(NANOS,true)); optional double x; }")
+    val plain = Files.createTempDirectory("plain").toString + "/plain.parquet"
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(plain))
+      .withType(schema).build()
+    try {
+      val groups = new SimpleGroupFactory(schema)
+      (0 until 3).foreach { i =>
+        writer.write(groups.newGroup().append("a", i)
+          .append("raw", Binary.fromString(s"r$i")).append("u", s"u$i")
+          .append("tn", i * 1000L).append("x", i * 0.25))
+      }
+    } finally writer.close()
+    assert(parity(Seq(plain))("raw").dataType === BinaryType)
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try assert(parity(Seq(plain))("raw").dataType === StringType)
+    finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+    // a partitioned directory: the partition column comes last
+    val parted = Files.createTempDirectory("parted").toString + "/events"
+    spark.range(12).select(col("id"), (col("id") * 0.5).as("X"), (col("id") % 3).as("p"))
+      .write.partitionBy("p").parquet(parted)
+    assert(parity(Seq(parted)).fieldNames.toSeq === Seq("id", "X", "p"))
   }
 
   test("GenericLoader.read names the parquet file whose columns differ") {
@@ -139,10 +192,10 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("GenericLoader.read(withOrdering) on parquet: file_id is the file's" +
-      " index, seq rises within each file, one Spark job") {
+      " index, seq rises within each file, no Spark job") {
     val files = parquetRun()
     var df: DataFrame = null
-    assert(jobsStartedBy { df = GenericLoader.read(spark, files, withOrdering = true) } === 1)
+    assert(jobsStartedBy { df = GenericLoader.read(spark, files, withOrdering = true) } === 0)
     assert(df.columns.toSeq === Seq("id", "X", "tof", "file_id", "seq"))
     val byFile = df.select("file_id", "seq", "id").collect()
       .groupBy(_.getInt(0)).map { case (f, rs) =>
