@@ -184,8 +184,10 @@ object Binning {
     // under-raise here. That corner fails LOUDLY and actionably (the
     // merge map's 2^30 ceiling names spark.sql.shuffle.partitions)
     // rather than silently scheduling 4096 near-empty tasks on the
-    // common sparse case. (Planning-only rdd probe, same posture as
-    // ensureParallelism. A user-lowered spark.sql.defaultSizeInBytes
+    // common sparse case. (The rdd probe only plans when the child has
+    // no exchange; over a stats-less child WITH exchanges it runs their
+    // map stages under AQE, unlike Dedup.ensureParallelism, which skips
+    // such inputs. A user-lowered spark.sql.defaultSizeInBytes
     // can only misread a real estimate as "unknown", which raises MORE
     // partitions — the safe direction.)
     val rowsBound: Long =

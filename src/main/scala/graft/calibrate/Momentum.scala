@@ -83,16 +83,31 @@ object Momentum {
       newYColumn: String,
       detectorRanges: ((Double, Double), (Double, Double)),
   ): DataFrame => DataFrame = {
-    require(invDfield.length == 2)
+    require(invDfield.length == 2 && !invDfield.contains(null),
+      "applyDfield: want two non-null fields")
     // the codegen'd interp indexes (r0+1, c0+1) unconditionally — a
     // degenerate field must get the named error (rows checked before
     // cols so a 0-row field doesn't crash the cols read itself)
     val rows = invDfield(0).length
     require(rows >= 2, s"applyDfield: deformation field must be >= 2x2, " +
       s"got $rows rows")
+    require(invDfield(0)(0) != null, "applyDfield: field 0 row 0 is null")
     val cols = invDfield(0)(0).length
     require(cols >= 2,
       s"applyDfield: deformation field must be >= 2x2, got ${rows}x$cols")
+    // both flat grids are indexed as rows × cols: a null or ragged row, or
+    // a second field of another shape, would shift every cell after it
+    for (f <- 0 to 1) {
+      val field = invDfield(f)
+      require(field.length == rows,
+        s"applyDfield: field $f has ${field.length} rows, want $rows")
+      for (r <- 0 until rows) {
+        val row = field(r)
+        require(row != null, s"applyDfield: field $f row $r is null")
+        require(row.length == cols, s"applyDfield: field $f row $r has " +
+          s"length ${row.length}, want $cols")
+      }
+    }
     // map detector coordinates onto grid indices (momentum.py:2054-2060)
     val xScale = (rows - 1).toDouble / (detectorRanges._1._2 - detectorRanges._1._1)
     val yScale = (cols - 1).toDouble / (detectorRanges._2._2 - detectorRanges._2._1)

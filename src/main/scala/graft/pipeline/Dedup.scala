@@ -156,13 +156,27 @@ object Dedup {
     * whenever the scan already has enough splits, which at lake scale it
     * always does.
     *
-    * The `df.rdd.getNumPartitions` probe plans the query once on the
-    * driver (no job runs, no data moves) — intentional: Spark exposes no
-    * cheaper pre-execution split count, and the probe cost is amortized
-    * over the signature pipeline it protects. At lake scale the branch is
-    * never taken; callers that know their input is wide can skip it.
+    * The split count is read with `df.rdd.getNumPartitions` only when the
+    * executed plan has no exchange, no subquery, no adaptive wrapper and
+    * no unbuilt cache over such a plan: only then is that read pure
+    * planning. Under AQE, `df.rdd` over an input with exchanges runs the
+    * input's map stages, a job whose output is thrown away. Such an input
+    * already had its partitioning set by a shuffle or a join, so it is
+    * returned unchanged, and this guard never starts a Spark job.
     */
   private def ensureParallelism(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def runsJobs(plan: SparkPlan): Boolean = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case s: InMemoryTableScanExec =>
+        !s.relation.cacheBuilder.isCachedColumnBuffersLoaded &&
+          runsJobs(s.relation.cachedPlan)
+      case p => p.subqueries.nonEmpty
+    }
+    if (runsJobs(df.queryExecution.executedPlan)) return df
     val p = df.sparkSession.sessionState.conf.numShufflePartitions
     val want = math.min(p, df.sparkSession.sparkContext.defaultParallelism)
     if (df.rdd.getNumPartitions < want) df.repartition(p) else df
@@ -327,7 +341,7 @@ object Dedup {
   /** Both physical near-dup plans over a prepared `(id, sig)` frame (see
     * [[minhashNearDuplicates]] for their semantics) — split out so the
     * auto path can feed BOTH the census and the chosen plan from one
-    * cached signature table instead of shingling the corpus twice.
+    * signature shuffle instead of shingling the corpus twice.
     */
   private[graft] def minhashFromSigs(
       sigs: DataFrame,
@@ -567,25 +581,20 @@ object Dedup {
     * is identical either way (parity is plan-pinned in PipelineSpec).
     *
     * The census premium is paid ONCE, not twice: the signature table is
-    * built, id-partitioned, and persisted (MEMORY_ONLY), the census
-    * aggregates over it (triggering the cache build), and the CHOSEN
-    * plan reuses the same cached signatures — so auto's total work is
-    * one signature pass + one small bucket aggregate on top of the
-    * pinned plan, instead of round-12's full second shingling pass (a
-    * sampled census was measured first and saves nothing at bench
-    * scale: the fixed scan+exchange dominates there, not shingling).
-    * Storage is MEMORY_ONLY deliberately: the returned plan is lazy, so
-    * this function has no safe place to unpersist — memory-only blocks
-    * self-evict under LRU pressure (recompute is safe, and never worse
-    * than round-12's unconditional second pass), whereas a disk tier
-    * would accumulate spill files across corpora in a long-lived
-    * session with no bound. Batch callers can still
-    * `spark.catalog.clearCache()` between corpora; ~300 B/doc means
-    * 1e9 docs ≈ 300 GB of storage memory across a lake-scale cluster.
-    * Corpora too large even for that can pass `censusFraction < 1` to
-    * take the UNCACHED sampled-census path
-    * ([[minhashPairMassCensus]]'s exact-expectation rescale) and let
-    * the chosen plan re-shingle.
+    * built and id-partitioned by one shuffle, whose map stage runs once
+    * in this call (under AQE before the census, else as the census's
+    * first stage). The census and the CHOSEN plan both
+    * read that shuffle's finished output
+    * ([[org.apache.spark.sql.GraftBridge.ofExecutedRdd]]), so auto's
+    * total work is one signature pass + one small bucket aggregate on
+    * top of the pinned plan, instead of round-12's full second shingling
+    * pass (a sampled census was measured first and saves nothing at bench
+    * scale: the fixed scan+exchange dominates there, not shingling). No
+    * cache entry is made: the shuffle files live as long as the returned
+    * frame and go when the ContextCleaner collects it. Corpora whose
+    * census should touch only a sample can pass `censusFraction < 1` to
+    * take the sampled-census path ([[minhashPairMassCensus]]'s
+    * exact-expectation rescale) and let the chosen plan re-shingle.
     *
     * TOY-SCALE FLOOR: the census is a flat ~0.2–0.4 s Spark action, which
     * only matters when the dedup itself is sub-second — exactly the small
@@ -643,9 +652,16 @@ object Dedup {
       minhashNearDuplicates(df, textCol, idCol, k, numHashes, bands,
         threshold, seed, portable, inlineVerify = inline)
     } else {
-      val sigs = minhashSignatures(df, textCol, idCol, k, numHashes, seed,
-        portable).repartition(col("id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      // the id shuffle runs here, once; census and chosen plan both read
+      // its map output. Its width is pinned to the shuffle partitions so
+      // AQE keeps the read un-coalesced: the frame is then plainly hash
+      // partitioned by id, and the chosen plan's id-keyed exchanges and
+      // attach joins reuse that instead of re-shuffling the signatures
+      // (a coalesced read matches only itself)
+      val sigs = org.apache.spark.sql.GraftBridge.ofExecutedRdd(
+        minhashSignatures(df, textCol, idCol, k, numHashes, seed, portable)
+          .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+            col("id")))
       val (docs, pairMass, maxBucket) = censusOfSigs(sigs, numHashes, bands)
       val inline = minhashPreferInline(docs, pairMass, pairMassPerDoc)
       log(docs, pairMass, inline)

@@ -132,18 +132,25 @@ class CalibrateSpec extends SparkSpec {
     }
   }
 
-  test("a failing field broadcast surfaces as its own exception") {
+  test("applyDfield names a null row, a ragged row or a mismatched field") {
     val df = Seq((1.0, 1.0)).toDF("X", "Y")
-    val good = Array.tabulate(4, 4)((r, c) => r + c * 0.5)
-    // a missing row fails that field's flatten inside its broadcast task
-    val holed = Array.tabulate(4, 4)((r, c) => r - c * 0.5)
-    holed(2) = null
-    for (field <- Seq(Array(good, holed), Array(holed, good))) {
-      val e = intercept[NullPointerException](Momentum.applyDfield(
-        spark, df, field, "X", "Y", "Xm", "Ym", ((0.0, 4.0), (0.0, 4.0))))
-      // thrown where the task failed, not a copy made on the caller's thread
-      assert(e.getCause === null, e)
+    def good = Array.tabulate(4, 4)((r, c) => r + c * 0.5)
+    def rejected(fields: Array[Array[Array[Double]]]): String =
+      intercept[IllegalArgumentException](Momentum.applyDfield(
+        spark, df, fields, "X", "Y", "Xm", "Ym", ((0.0, 4.0), (0.0, 4.0))))
+        .getMessage
+    for (f <- 0 to 1) {
+      val holed = Array(good, good)
+      holed(f)(2) = null
+      assert(rejected(holed).contains(s"field $f row 2 is null"))
+      val ragged = Array(good, good)
+      ragged(f)(3) = Array(1.0, 2.0, 3.0)
+      assert(rejected(ragged).contains(s"field $f row 3 has length 3, want 4"))
     }
+    assert(rejected(Array(good, Array.fill(3, 4)(0.0)))
+      .contains("field 1 has 3 rows, want 4"))
+    assert(rejected(Array(good, Array.fill(4, 5)(0.0)))
+      .contains("field 1 row 0 has length 5, want 4"))
   }
 
   test("momentum workflow: TPS warp → invertField → applyDfield → k-axis " +

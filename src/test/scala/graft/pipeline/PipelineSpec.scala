@@ -232,6 +232,169 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** `n` docs: ids k and k + 550 are byte-identical (exact copies), and
+    * 2m, 2m + 1 (mod 550) differ by one trailing word (near copies). */
+  private def nearCorpus(n: Int, partitions: Int = 4) = {
+    val base = col("id") % 550
+    spark.range(0, n, 1, partitions).select(col("id").as("doc_id"),
+      concat_ws(" ", ((0 until 8).map(j =>
+        concat(lit(s"w${j}_"), (base / 2).cast("long"))) :+
+        when(base % 2 === 1, lit("tail"))): _*).as("text"))
+  }
+
+  private lazy val nearParquet: org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("near-corpus").toString
+    nearCorpus(600).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSparkBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.drainListeners(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("near-dup plans over an input with exchanges start no Spark job") {
+    val kept = Dedup.dropExactDuplicates(nearParquet, "text", "doc_id")
+    // the parallelism guard must not execute the exact-dedup frame to
+    // count its partitions (under AQE `df.rdd` runs its map stages)
+    assert(jobsDuring {
+      Dedup.minhashSignatures(kept, "text", "doc_id")
+      Dedup.minhashNearDuplicates(kept, "text", "doc_id")
+      Dedup.simhashNearDuplicates(kept, "text", "doc_id")
+    } === 0)
+    // nor build a cache that is still unbuilt over such a plan
+    val cached = Dedup.dropExactDuplicates(nearParquet, "text", "doc_id").cache()
+    try assert(jobsDuring(Dedup.minhashSignatures(cached, "text", "doc_id")) === 0)
+    finally cached.unpersist()
+  }
+
+  test("a one-partition exchange-free input still fans the signature stage" +
+      " out to the shuffle partitions") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def exchangeWidths(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      Dedup.minhashSignatures(df, "text", "doc_id").queryExecution.sparkPlan
+        .collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+    val p = spark.sessionState.conf.numShufflePartitions
+    assert(exchangeWidths(nearCorpus(64, partitions = 1)) === Seq(p))
+    assert(exchangeWidths(nearCorpus(64, partitions = p)) === Nil)
+  }
+
+  test("auto plan: census and pairs share one signature shuffle, no cache" +
+      " entry is left") {
+    val kept = Dedup.dropExactDuplicates(nearParquet, "text", "doc_id")
+    val docs = kept.count()
+    spark.catalog.clearCache()
+    // (rdd ids, shuffle records written) of every completed stage
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Set[Int], Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        written.add(s.stageInfo.rddInfos.map(_.id).toSet ->
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (auto, pairs) = try {
+      val auto = Dedup.minhashNearDuplicatesAuto(kept, "text", "doc_id",
+        threshold = 0.5, censusFloorBytes = 0L)
+      val pairs = auto.collect()
+      org.apache.spark.GraftSparkBridge.drainListeners(spark.sparkContext)
+      (auto, pairs)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val found = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert((0L until 550L by 2).forall(m => found((m, m + 1)))) // near copies
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the signature frame's id shuffle: its map stage completed once, over
+    // every document, although the census and the pair plan both read it
+    // (its map stage is the one stage that computes the map-side RDD)
+    def mapSides(rdd: org.apache.spark.rdd.RDD[_]): Seq[Int] =
+      rdd.dependencies.flatMap {
+        case s: org.apache.spark.ShuffleDependency[_, _, _] => Seq(s.rdd.id)
+        case d => mapSides(d.rdd)
+      }
+    val sigMapSide = auto.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => mapSides(l.rdd).head
+    }.distinct
+    assert(sigMapSide.length === 1)
+    import scala.jdk.CollectionConverters._
+    assert(written.asScala.toSeq.filter(_._1.contains(sigMapSide.head))
+      .map(_._2) === Seq(docs))
+  }
+
+  test("auto plan: the attach joins read the signature shuffle without" +
+      " another exchange") {
+    import org.apache.spark.sql.execution.{GenerateExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val kept = Dedup.dropExactDuplicates(nearParquet, "text", "doc_id")
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val auto = Dedup.minhashNearDuplicatesAuto(kept, "text", "doc_id",
+        threshold = 0.5, censusFloorBytes = 0L)
+      auto.collect()
+      val plan = auto.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case other => other
+      }
+      // the attach joins are the two whose right side reads the signature
+      // frame directly (the band join's sides read it through posexplode)
+      // (the helper walks into query stages, which are plan leaves)
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      def has(p: org.apache.spark.sql.execution.SparkPlan)(
+          pred: org.apache.spark.sql.execution.SparkPlan => Boolean) =
+        aqe.find(p)(pred).isDefined
+      val attach = aqe.collect(plan) {
+        case j: SortMergeJoinExec if has(j.right)(_.isInstanceOf[RDDScanExec]) &&
+            !has(j.right)(_.isInstanceOf[GenerateExec]) => j
+      }
+      assert(attach.length === 2, plan)
+      attach.foreach(j => assert(!has(j.right) {
+        case _: Exchange | _: ShuffleQueryStageExec => true
+        case _ => false
+      }, plan))
+    }
+  }
+
+  test("auto plan pairs equal minhashNearDuplicates with AQE on and off and" +
+      " at 1 and 64 shuffle partitions") {
+    val kept = Dedup.dropExactDuplicates(nearParquet, "text", "doc_id")
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "est_jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for ((aqe, parts) <- Seq(("true", "4"), ("false", "4"), ("true", "1"),
+        ("true", "64"), ("false", "64")))
+      withConfs("spark.sql.adaptive.enabled" -> aqe,
+          "spark.sql.shuffle.partitions" -> parts) {
+        val want = norm(Dedup.minhashNearDuplicates(kept, "text", "doc_id",
+          threshold = 0.5))
+        assert(want.size >= 275) // the (2m, 2m + 1) near copies, and more
+        assert(norm(Dedup.minhashNearDuplicatesAuto(kept, "text", "doc_id",
+          threshold = 0.5, censusFloorBytes = 0L)) === want, s"aqe=$aqe parts=$parts")
+      }
+  }
+
   test("TopKAgg == window row_number ranking across partitions, ties and" +
       " duplicates") {
     // 40k candidate rows over 37 queries, 64 partitions, heavy score
