@@ -354,9 +354,9 @@ object Bench {
         selfBracketed = selfBracketed)
 
     // dedup_exact's full-text xxhash is allocation-heavy enough that
-    // its C2 warm-up TAIL spans ~17 executions (BenchProf dedup_floor:
-    // the quiet-box floor descends monotonically 0.42 → 0.22 s, no GC
-    // correlation) — with the suite-default warm-up its minimum keeps
+    // its C2 warm-up TAIL spans ~17 executions (the quiet-box floor
+    // descends monotonically 0.42 → 0.22 s, no GC correlation; NOTES.md,
+    // "Round-19 candidates / standing cautions" item 2) — with the suite-default warm-up its minimum keeps
     // creeping down through the timed rounds, and on an unlucky run the
     // min-anchored agreement band excludes every earlier rep (two r18
     // close runs exited 3 exactly this way). Pay the tail untimed so

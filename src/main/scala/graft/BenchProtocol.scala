@@ -73,8 +73,8 @@ object BenchProtocol {
     * queries (VERDICT r17). `extraWarmups` adds per-workload passes on
     * top of `warmups`: an allocation-heavy workload can have a C2
     * warm-up TAIL much longer than the suite default (dedup_exact's
-    * floor descends monotonically over ~17 executions — BenchProf
-    * `dedup_floor`), so its minimum keeps creeping down through the
+    * floor descends monotonically over ~17 executions — NOTES.md,
+    * "Round-19 candidates / standing cautions" item 2), so its minimum keeps creeping down through the
     * timed rounds and the min-anchored agreement band excludes the
     * earlier reps; paying the tail untimed lets the timed reps start at
     * the plateau the band is anchored to.

@@ -189,8 +189,7 @@ object RefBench {
     val loaderWorkloads: Seq[(String, () => Unit)] =
       Seq[(String, String, () => DataFrame)](
         ("loader_compute_mpes", mpesPath, () =>
-          graft.loader.StreamFixture.MpesH5Loader.readDataframe(
-            spark, Seq(mpesPath))._1),
+          graft.loader.MpesLoader.readDataframe(spark, Seq(mpesPath))._1),
         ("loader_compute_flash", flashPath, () =>
           graft.loader.InstrumentH5Loader.readDataframe(spark, Seq(flashPath),
             graft.loader.InstrumentH5Loader.flashDefaultChannels,

@@ -204,7 +204,7 @@ object Binning {
   }
 
   /** The fused flat-key bin-index column (see [[FlatBinIndexExpr]]). */
-  def flatBinIndex(axes: Seq[BinAxis], strides: Seq[Long]): Column =
+  private def flatBinIndex(axes: Seq[BinAxis], strides: Seq[Long]): Column =
     org.apache.spark.sql.GraftBridge.column(FlatBinIndexExpr(
       axes.map(ax => org.apache.spark.sql.GraftBridge.expression(
         col(ax.column).cast("double"))),

@@ -123,10 +123,13 @@ object HistogramKernel {
     */
   val partialFlushEntries: Int = 1 << 22
 
-  /** Probe instrumentation (bin64 ScaleProbe): high-water mark of live
-    * entries in any count map built since the last `set(0)`. One atomic
-    * update per MAP (not per row) — free on the hot path. In-JVM only:
-    * meaningful for local-mode probes, per-executor on a cluster.
+  /** High-water mark of live entries in any count map built since the
+    * last `set(0)`; HistogramKernelSpec's flush-bound test reads it to
+    * check that a partial map never outgrows [[partialFlushEntries]].
+    * One atomic update per MAP (not per row) — free on the hot path.
+    * In-JVM only: meaningful in local mode, per-executor on a cluster.
+    * The round-13 merge-map peaks (NOTES.md, "Round-13 bin64: kernel
+    * histogram weak-scaling") were read from it.
     */
   val maxMapEntries = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -68,15 +68,15 @@ object InstrumentH5Loader extends Loader {
       channels: Seq[Channel],
   ): DataFrame = {
     val ordered = GenericLoader.naturalSort(paths)
-    val fileIds = ordered.map(StreamFixture.normPath).zipWithIndex.toMap
+    val fileIds = ordered.map(ChannelLoader.normPath).zipWithIndex.toMap
     val chB = spark.sparkContext.broadcast(channels)
     val fileIdsB = spark.sparkContext.broadcast(fileIds)
     val enc: Encoder[Row] = Encoders.row(longSchema)
-    StreamFixture.fileBytesFrame(spark, ordered)
+    ChannelLoader.fileBytesFrame(spark, ordered)
       .mapPartitions { rows =>
         rows.flatMap { r =>
           val fileId = fileIdsB.value.getOrElse(
-            StreamFixture.normPath(r.getString(0)), -1)
+            ChannelLoader.normPath(r.getString(0)), -1)
           require(fileId >= 0, s"${r.getString(0)} matches none of the input paths")
           val root = Hdf5Minimal.parse(r.getAs[Array[Byte]](1))
           // memoize decoded datasets: flash reads 4 slices of one block
@@ -153,7 +153,7 @@ object InstrumentH5Loader extends Loader {
         // was written from; reuse requires byte equality. (The leading
         // underscore keeps Spark's parquet reader from listing it.)
         val manifest = (channels.map(_.name).sorted.mkString("channels:", ",", "") +:
-          GenericLoader.naturalSort(paths).map(StreamFixture.normPath)
+          GenericLoader.naturalSort(paths).map(ChannelLoader.normPath)
             .zipWithIndex.map { case (p, i) => s"$i:$p" }).mkString("\n")
         // all buffer IO through the Hadoop FS for the dir's scheme: a
         // java.io/java.nio check is local-only, so a cluster buffer on

@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loader layer (SURVEY.md §2.1): scan instrument data into the event /
-  * timed dataframes. With no HDF5 toolchain in the JVM stack, ingestion
-  * universalizes the reference's own flash-loader design — convert raw
-  * files once into a Parquet "buffer" lake, then scan that
-  * (`sed/loader/flash/loader.py:617-742`); these loaders consume the
-  * post-conversion shapes.
+  * timed dataframes. [[Hdf5Minimal]] reads the raw instrument files
+  * ([[MpesLoader]], [[InstrumentH5Loader]]); as in the reference's flash
+  * loader, raw files can be converted once into a Parquet "buffer" lake
+  * and scanned from there (`sed/loader/flash/loader.py:617-742`).
   */
 trait Loader {
 
@@ -328,6 +327,60 @@ object ChannelLoader {
     // partitions would otherwise fragment into 20 tiny files)
     df.coalesce(1).write.mode("overwrite").parquet(dir)
     df.sparkSession.read.parquet(dir)
+  }
+
+  /** Canonical path key for matching driver-side input paths against the
+    * `path` column of [[fileBytesFrame]]: both go through the same URI
+    * normalization (`file:/x`, `file:///x` and a bare `/x` all map to
+    * `file:///x`), so file-id assignment cannot silently miss on scheme
+    * spelling. Non-local schemes keep their authority.
+    */
+  def normPath(p: String): String = {
+    val u = new org.apache.hadoop.fs.Path(p).toUri
+    val scheme = Option(u.getScheme).getOrElse("file")
+    val auth = Option(u.getAuthority).getOrElse("")
+    s"$scheme://$auth${u.getPath}"
+  }
+
+  /** Executor-side `(path, content)` frame — one whole file per row,
+    * spread over `min(nFiles, defaultParallelism)` tasks. This replaces
+    * the `binaryFile` source for decode inputs: binaryFile PACKS files
+    * into partitions by byte size (`spark.sql.files.maxPartitionBytes`,
+    * 128 MB), which is right for IO-bound scans and wrong for CPU-bound
+    * per-file decode — 64 × 3.8 MB instrument files packed into two
+    * 128 MB partitions ran the whole decode on 2 of 32 cores (the
+    * round-11 `loader64` rehearsal measured the cliff: 34.7 s vs ~3 s
+    * spread). Only path strings shuffle (round-robin); each task opens
+    * its files through the Hadoop FS layer, so every binaryFile scheme
+    * (hdfs://, s3a://, file:) keeps working, and the 2 GB binaryFile
+    * per-file ceiling becomes an explicit require.
+    */
+  private[loader] def fileBytesFrame(
+      spark: SparkSession, ordered: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val n = math.max(1, math.min(ordered.length,
+      spark.sparkContext.defaultParallelism))
+    // ship the SESSION'S Hadoop configuration (spark.hadoop.* — S3
+    // credentials, endpoints, kerberos) to the tasks: a bare
+    // `new Configuration()` there reads only classpath XML and would
+    // silently drop what binaryFile honored
+    val confBox = spark.sparkContext.broadcast(
+      org.apache.spark.GraftSparkBridge.hadoopConfBox(spark.sparkContext))
+    spark.createDataset(ordered).repartition(n)
+      .mapPartitions { paths =>
+        val conf = confBox.value.value
+        paths.map { p =>
+          val hp = new org.apache.hadoop.fs.Path(p)
+          val fs = hp.getFileSystem(conf)
+          val len = fs.getFileStatus(hp).getLen
+          require(len <= Int.MaxValue - 512,
+            s"$p is ${len} B — exceeds the single-buffer decode limit")
+          val buf = new Array[Byte](len.toInt)
+          val in = fs.open(hp)
+          try in.readFully(0, buf) finally in.close()
+          (p, buf)
+        }
+      }.toDF("path", "content")
   }
 
 

@@ -1,69 +1,29 @@
 package graft.loader
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Binary instrument-stream ingestion (S3/S4/S5 made concrete on bytes).
+/** The mpes instrument loader (S3/S4/S5): SPECS Metis HDF5 files into the
+  * event and timed tables.
   *
-  * The reference's mpes loader reads SPECS Metis HDF5 files — one 1-D
-  * float dataset per `Stream_N` group plus an `msMarkers` dataset and a
-  * file-start timestamp attribute (`sed/loader/mpes/loader.py:54-140,
-  * 267-347`) — and its flash loader converts every instrument file to a
-  * Parquet buffer exactly once (`sed/loader/flash/loader.py:617-742`).
-  * This module universalizes that design on a dependency-free container
-  * with the SAME logical layout (named per-channel float64 datasets +
-  * ms-marker event indices + start-time attribute), so the whole
-  * binary-file ingestion path — executor-side decode, column aliasing,
-  * per-event timestamp synthesis, timed-table derivation, Parquet
-  * buffering — is real and tested end-to-end. Parsing true HDF5
-  * superblocks needs a JNI/external library (documented gap, SURVEY §7.4
-  * risk 8); the byte-level container is the only swappable piece.
-  *
-  * File layout (little-endian): magic `GSD1`, `startTs: f64`,
-  * `nChannels: i32`, then per channel `nameLen: i16, name: UTF-8,
-  * nValues: i32, values: f64...`, then `nMarkers: i32, markers: i64...`
-  * (marker `i` = count of events recorded by millisecond `i`, ascending —
-  * the `msMarkers` semantics).
+  * A raw mpes file holds one 1-D float dataset per `Stream_N` channel
+  * (aliased by its `Name` attribute), an `msMarkers` dataset and a
+  * `FirstEventTimeStamp` root attribute (`sed/loader/mpes/loader.py:54-140,
+  * 267-347`). [[Hdf5Minimal]] decodes the files inside executor tasks;
+  * the driver only gathers paths and, for channel discovery, reads the
+  * first file's structure. The whole path — executor-side decode, column
+  * aliasing, per-event timestamp synthesis, timed-table derivation — is
+  * the reference's loader on Spark.
   */
-object StreamFixture {
+object MpesLoader extends Loader {
 
   final case class StreamData(
       startTs: Double,
       channels: Seq[(String, Array[Double])],
       msMarkers: Array[Long],
   )
-
-  private val Magic = Array[Byte]('G', 'S', 'D', '1')
-
-  /** Driver-side fixture writer (the role of the instrument DAQ). */
-  def write(path: String, data: StreamData): Unit = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    def writeLong(v: Long): Unit = out.writeLong(java.lang.Long.reverseBytes(v))
-    def writeInt(v: Int): Unit = out.writeInt(Integer.reverseBytes(v))
-    def writeShort(v: Int): Unit =
-      out.writeShort(java.lang.Short.reverseBytes(v.toShort))
-    def writeDouble(v: Double): Unit =
-      writeLong(java.lang.Double.doubleToLongBits(v))
-    out.write(Magic)
-    writeDouble(data.startTs)
-    writeInt(data.channels.length)
-    data.channels.foreach { case (name, values) =>
-      val nb = name.getBytes("UTF-8")
-      writeShort(nb.length)
-      out.write(nb)
-      writeInt(values.length)
-      values.foreach(writeDouble)
-    }
-    writeInt(data.msMarkers.length)
-    data.msMarkers.foreach(writeLong)
-    out.flush()
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), bos.toByteArray)
-  }
 
   /** Timestamp format of the mpes `FirstEventTimeStamp` attribute
     * (`sed/loader/mpes/loader.py:312-316`, Python
@@ -101,8 +61,10 @@ object StreamFixture {
       attrs = Map("FirstEventTimeStamp" -> ts)))
   }
 
-  /** Decode an mpes-layout HDF5 byte array into [[StreamData]]. */
-  def decodeH5(bytes: Array[Byte]): StreamData = {
+  /** Pure decoder of an mpes-layout HDF5 byte array — runs inside
+    * executor tasks on each file's content.
+    */
+  def decode(bytes: Array[Byte]): StreamData = {
     val root = Hdf5Minimal.parse(bytes)
     val markers = root.dataset("msMarkers").data.asLongs
     val channels = root.datasets
@@ -115,6 +77,14 @@ object StreamFixture {
       case None => 0.0
     }
     StreamData(startTs, channels, markers)
+  }
+
+  /** [[decode]] of one input file, failing with a message that names the
+    * file when its bytes are not HDF5 at all.
+    */
+  private def decodeFile(rawPath: String, bytes: Array[Byte]): StreamData = {
+    require(Hdf5Minimal.isHdf5(bytes), s"stream file $rawPath is not an HDF5 file")
+    decode(bytes)
   }
 
   /** Channel discovery on a raw instrument file (`get_groups_and_aliases`,
@@ -131,35 +101,6 @@ object StreamFixture {
     root.datasets
       .filter(_.name.contains(searchPattern))
       .map(d => d.name -> d.attrs.getOrElse("Name", d.name))
-  }
-
-  /** Pure decoder — runs inside executor tasks on `binaryFile` content.
-    * Dispatches on the container signature: real HDF5 (mpes layout) or
-    * the GSD1 byte fixture.
-    */
-  def decode(bytes: Array[Byte]): StreamData = {
-    if (Hdf5Minimal.isHdf5(bytes)) return decodeH5(bytes)
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = new Array[Byte](4)
-    buf.get(magic)
-    require(magic.sameElements(Magic), "not a GSD1 stream file")
-    val startTs = buf.getDouble
-    val nCh = buf.getInt
-    val channels = (0 until nCh).map { _ =>
-      val nameLen = buf.getShort.toInt
-      val nb = new Array[Byte](nameLen)
-      buf.get(nb)
-      val n = buf.getInt
-      val values = new Array[Double](n)
-      var i = 0
-      while (i < n) { values(i) = buf.getDouble; i += 1 }
-      (new String(nb, "UTF-8"), values)
-    }
-    val nM = buf.getInt
-    val markers = new Array[Long](nM)
-    var i = 0
-    while (i < nM) { markers(i) = buf.getLong; i += 1 }
-    StreamData(startTs, channels, markers)
   }
 
   /** Per-event epoch timestamps from ms markers (S4,
@@ -180,22 +121,9 @@ object StreamFixture {
     ts
   }
 
-  /** Canonical path key for matching driver-side input paths against the
-    * `path` Spark's binaryFile source reports: both go through the same
-    * URI normalization (`file:/x`, `file:///x` and a bare `/x` all map to
-    * `file:///x`), so file-id assignment cannot silently miss on scheme
-    * spelling. Non-local schemes keep their authority.
-    */
-  def normPath(p: String): String = {
-    val u = new org.apache.hadoop.fs.Path(p).toUri
-    val scheme = Option(u.getScheme).getOrElse("file")
-    val auth = Option(u.getAuthority).getOrElse("")
-    s"$scheme://$auth${u.getPath}"
-  }
-
-  /** Ingest stream files into the event table (S3): `binaryFile` scan →
-    * executor-side decode → one row per event with aliased channel
-    * columns, synthesized `ts`, and the explicit global ordering
+  /** Ingest stream files into the event table (S3): one `(path, content)`
+    * row per file → executor-side decode → one row per event with aliased
+    * channel columns, synthesized `ts`, and the explicit global ordering
     * (`file_id`, `seq`) the window-based fills require (SURVEY §7.4 risk
     * 3). One task per file, exactly like the reference's one-delayed-task
     * -per-file ingestion — at lake scale parallelism follows file count.
@@ -210,7 +138,7 @@ object StreamFixture {
       aliases: Seq[(String, String)],
   ): DataFrame = {
     val ordered = GenericLoader.naturalSort(paths)
-    val fileIds = ordered.map(normPath).zipWithIndex.toMap
+    val fileIds = ordered.map(ChannelLoader.normPath).zipWithIndex.toMap
     val outSchema = StructType(
       StructField("file_id", IntegerType, nullable = false) +:
         StructField("seq", LongType, nullable = false) +:
@@ -219,17 +147,17 @@ object StreamFixture {
     val enc: Encoder[Row] = Encoders.row(outSchema)
     val aliasesB = spark.sparkContext.broadcast(aliases)
     val fileIdsB = spark.sparkContext.broadcast(fileIds)
-    fileBytesFrame(spark, ordered)
+    ChannelLoader.fileBytesFrame(spark, ordered)
       .mapPartitions { rows =>
         val as = aliasesB.value
         rows.flatMap { r =>
           val rawPath = r.getString(0)
-          val fileId = fileIdsB.value.getOrElse(normPath(rawPath), -1)
+          val fileId = fileIdsB.value.getOrElse(ChannelLoader.normPath(rawPath), -1)
           // fail loudly: a silent -1 would corrupt the global (file_id,
           // seq) ordering every window fill depends on
           require(fileId >= 0,
             s"stream file $rawPath matches none of the input paths")
-          val data = decode(r.getAs[Array[Byte]](1))
+          val data = decodeFile(rawPath, r.getAs[Array[Byte]](1))
           val byName = data.channels.toMap
           val missing = as.map(_._1).filterNot(byName.contains)
           require(missing.isEmpty,
@@ -245,65 +173,22 @@ object StreamFixture {
   }
 
   /** S8 [[Loader]] contract over mpes stream files: channel map
-    * auto-discovered from the first file (the MpesLoader default), events
-    * from [[ingest]], timed table from [[ingestTimed]].
+    * auto-discovered from the first file (the reference MpesLoader's
+    * default), events from [[ingest]], timed table from [[ingestTimed]].
     */
-  object MpesH5Loader extends Loader {
-    override def readDataframe(
-        spark: SparkSession, paths: Seq[String]): (DataFrame, Option[DataFrame]) = {
-      val ordered = GenericLoader.naturalSort(paths)
-      val aliases = groupsAndAliases(readFileBytes(spark, ordered.head))
-      require(aliases.nonEmpty, s"${ordered.head}: no Stream datasets found")
-      val events = ingest(spark, paths, aliases)
-      val timed = ingestTimed(spark, paths, aliases)
-      // single small file: decode once, return a parquet-spill-backed
-      // events frame (see ChannelLoader.driverLocalMaxBytes); the timed
-      // frame stays lazy — most callers never materialize it
-      if (ChannelLoader.eagerSmallLoad(spark, paths))
-        (ChannelLoader.driverLocal(events), Some(timed))
-      else (events, Some(timed))
-    }
-  }
-
-  /** Executor-side `(path, content)` frame — one whole file per row,
-    * spread over `min(nFiles, defaultParallelism)` tasks. This replaces
-    * the `binaryFile` source for decode inputs: binaryFile PACKS files
-    * into partitions by byte size (`spark.sql.files.maxPartitionBytes`,
-    * 128 MB), which is right for IO-bound scans and wrong for CPU-bound
-    * per-file decode — 64 × 3.8 MB instrument files packed into two
-    * 128 MB partitions ran the whole decode on 2 of 32 cores (the
-    * round-11 `loader64` rehearsal measured the cliff: 34.7 s vs ~3 s
-    * spread). Only path strings shuffle (round-robin); each task opens
-    * its files through the Hadoop FS layer, so every binaryFile scheme
-    * (hdfs://, s3a://, file:) keeps working, and the 2 GB binaryFile
-    * per-file ceiling becomes an explicit require.
-    */
-  private[loader] def fileBytesFrame(
-      spark: SparkSession, ordered: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val n = math.max(1, math.min(ordered.length,
-      spark.sparkContext.defaultParallelism))
-    // ship the SESSION'S Hadoop configuration (spark.hadoop.* — S3
-    // credentials, endpoints, kerberos) to the tasks: a bare
-    // `new Configuration()` there reads only classpath XML and would
-    // silently drop what binaryFile honored
-    val confBox = spark.sparkContext.broadcast(
-      org.apache.spark.GraftSparkBridge.hadoopConfBox(spark.sparkContext))
-    spark.createDataset(ordered).repartition(n)
-      .mapPartitions { paths =>
-        val conf = confBox.value.value
-        paths.map { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(conf)
-          val len = fs.getFileStatus(hp).getLen
-          require(len <= Int.MaxValue - 512,
-            s"$p is ${len} B — exceeds the single-buffer decode limit")
-          val buf = new Array[Byte](len.toInt)
-          val in = fs.open(hp)
-          try in.readFully(0, buf) finally in.close()
-          (p, buf)
-        }
-      }.toDF("path", "content")
+  override def readDataframe(
+      spark: SparkSession, paths: Seq[String]): (DataFrame, Option[DataFrame]) = {
+    val ordered = GenericLoader.naturalSort(paths)
+    val aliases = groupsAndAliases(readFileBytes(spark, ordered.head))
+    require(aliases.nonEmpty, s"${ordered.head}: no Stream datasets found")
+    val events = ingest(spark, paths, aliases)
+    val timed = ingestTimed(spark, paths, aliases)
+    // single small file: decode once, return a parquet-spill-backed
+    // events frame (see ChannelLoader.driverLocalMaxBytes); the timed
+    // frame stays lazy — most callers never materialize it
+    if (ChannelLoader.eagerSmallLoad(spark, paths))
+      (ChannelLoader.driverLocal(events), Some(timed))
+    else (events, Some(timed))
   }
 
   /** Driver-side whole-file read through the Hadoop filesystem layer, so
@@ -352,7 +237,7 @@ object StreamFixture {
       aliases: Seq[(String, String)],
   ): DataFrame = {
     val ordered = GenericLoader.naturalSort(paths)
-    val fileIds = ordered.map(normPath).zipWithIndex.toMap
+    val fileIds = ordered.map(ChannelLoader.normPath).zipWithIndex.toMap
     val outSchema = StructType(
       StructField("file_id", IntegerType, nullable = false) +:
         StructField("ms", LongType, nullable = false) +:
@@ -361,15 +246,15 @@ object StreamFixture {
     val enc: Encoder[Row] = Encoders.row(outSchema)
     val aliasesB = spark.sparkContext.broadcast(aliases)
     val fileIdsB = spark.sparkContext.broadcast(fileIds)
-    fileBytesFrame(spark, ordered)
+    ChannelLoader.fileBytesFrame(spark, ordered)
       .mapPartitions { rows =>
         val as = aliasesB.value
         rows.flatMap { r =>
           val rawPath = r.getString(0)
-          val fileId = fileIdsB.value.getOrElse(normPath(rawPath), -1)
+          val fileId = fileIdsB.value.getOrElse(ChannelLoader.normPath(rawPath), -1)
           require(fileId >= 0,
             s"stream file $rawPath matches none of the input paths")
-          val data = decode(r.getAs[Array[Byte]](1))
+          val data = decodeFile(rawPath, r.getAs[Array[Byte]](1))
           val byName = data.channels.toMap
           val cols = as.map { case (ds, _) => byName(ds) }
           data.msMarkers.iterator.zipWithIndex.map { case (marker, ms) =>

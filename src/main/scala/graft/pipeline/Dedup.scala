@@ -305,11 +305,12 @@ object Dedup {
     *    (~24 B + 8 B·numHashes per row) and pairs verify AT FORMATION,
     *    deduplicated by the first-matching-band rule (a pair is emitted
     *    only from the lowest band index whose rows agree), so no
-    *    distinct and no pair-keyed exchanges exist at all. ScaleProbe
-    *    `pairs64` evidence: on a ×64 near-dup clique corpus (every doc
-    *    in a 64-clique, 11.1 M true pairs from 320 k docs) the default
-    *    plan's pair exchanges blow up to 11.4 GB shuffle / 506 s while
-    *    the inline plan stays bounded by docs × bands.
+    *    distinct and no pair-keyed exchanges exist at all. Evidence
+    *    (NOTES.md, "Round-9 ×64 pair-mass rehearsal"): on a ×64 near-dup
+    *    clique corpus (every doc in a 64-clique, 11.1 M true pairs from
+    *    320 k docs) the default plan's pair exchanges blow up to
+    *    11.4 GB shuffle / 506 s while the inline plan stays bounded by
+    *    docs × bands.
     *
     * Rule of thumb: default for ingest dedup of raw crawls; inline when
     * the corpus is known duplicate-heavy (mirror lakes, version stacks).
@@ -432,8 +433,9 @@ object Dedup {
     * `(docs, pairMass)` where `pairMass = Σ_buckets n·(n−1)/2` counts the
     * PRE-distinct candidate pairs the default [[minhashNearDuplicates]]
     * plan would shuffle — the quantity that cliffs on duplicate-heavy
-    * corpora (ScaleProbe `pairs64`: 11.4 GB / 457 s at pairMass ≈ 250×
-    * docs, vs 764 MB / 79.7 s for the inline plan).
+    * corpora (11.4 GB / 457 s at pairMass ≈ 250× docs, vs 764 MB /
+    * 79.7 s for the inline plan; NOTES.md, "Round-9 ×64 pair-mass
+    * rehearsal").
     *
     * Cost: one signature map pass + a `(band_idx, band_hash)` partial
     * aggregate whose shuffle is the DISTINCT bucket set only (ids are

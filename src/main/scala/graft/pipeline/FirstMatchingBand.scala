@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   *
   * A higher-order `filter(sequence(...), i -> slice(a) === slice(b))`
   * computes the same thing but is INTERPRETED per row with two array
-  * allocations per band — ScaleProbe measured that version 5× slower
-  * than the whole plan it was meant to fix (2 745 s vs 517 s at the
-  * ×64-clique rehearsal). This expression is one branch-predictable
+  * allocations per band — it measured 5× slower than the whole plan it
+  * was meant to fix (2 745 s vs 517 s at the ×64-clique rehearsal;
+  * NOTES.md, "Round-9 ×64 pair-mass rehearsal"). This expression is one branch-predictable
   * loop with no allocation, codegen'd into the join stage. Null
   * elements never match (consistent with [[PositionalEqCount]]).
   */

@@ -588,8 +588,7 @@ class ProcessorSpec extends SparkSpec with FixtureReport {
       assert(staged.contains(dst) && staged != fetchedH5.head, staged)
       // load staged vs direct, compute the same cube, compare exactly
       def cubeOf(path: String): (Long, Seq[Double]) = {
-        val (ev, _) = graft.loader.StreamFixture.MpesH5Loader
-          .readDataframe(spark, Seq(path))
+        val (ev, _) = graft.loader.MpesLoader.readDataframe(spark, Seq(path))
         val p = new Processor(spark, ev)
         val cube = p.compute(Seq(UniformAxis("X", 64, 0.0, 2048.0)))
         (ev.count(), cube.data.toSeq.map(_.toDouble))

@@ -150,7 +150,7 @@ class Hdf5Spec extends SparkSpec {
 
   test("hdf5: mpes-layout .h5 ingests through the Spark binaryFile path") {
     val dir = Files.createTempDirectory("h5").toFile.getPath
-    StreamFixture.writeH5(s"$dir/Scan0030_2.h5", StreamFixture.StreamData(
+    MpesLoader.writeH5(s"$dir/Scan0030_2.h5", MpesLoader.StreamData(
       startTs = 1.6e9 + 0.25,
       channels = Seq(
         "Stream_0" -> Array(1.0, 2.0, 3.0, 4.0),
@@ -158,41 +158,25 @@ class Hdf5Spec extends SparkSpec {
         "Stream_2" -> Array(7.0, 8.0, 9.0, 10.0)),
       msMarkers = Array(2L, 3L, 4L)))
     // decode on raw bytes (what executors do)
-    val data = StreamFixture.decode(
+    val data = MpesLoader.decode(
       Files.readAllBytes(java.nio.file.Paths.get(s"$dir/Scan0030_2.h5")))
     assert(data.startTs === 1.6e9 + 0.25)
     assert(data.channels.map(_._1) === Seq("Stream_0", "Stream_1", "Stream_2"))
     assert(data.msMarkers.toSeq === Seq(2L, 3L, 4L))
     // full Spark ingestion: binaryFile scan → decode → event table
-    val events = StreamFixture.ingest(spark, Seq(s"$dir/Scan0030_2.h5"),
+    val events = MpesLoader.ingest(spark, Seq(s"$dir/Scan0030_2.h5"),
       Seq("Stream_0" -> "X", "Stream_2" -> "t"))
     val rows = events.orderBy("seq").collect()
       .map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
     assert(rows.length === 4)
     assert(rows.map(_._2).toSeq === Seq(1.0, 2.0, 3.0, 4.0))
     assert(rows.map(_._3).toSeq === Seq(7.0, 8.0, 9.0, 10.0))
-    // ms-marker timestamp synthesis matches the GSD path semantics
+    // S4 ms-marker timestamp synthesis
     assert(rows.map(_._1).toSeq ===
       Seq(1.6e9 + 0.25, 1.6e9 + 0.25, 1.6e9 + 0.251, 1.6e9 + 0.252))
     // timed table works off the same .h5
-    val timed = StreamFixture.ingestTimed(spark, Seq(s"$dir/Scan0030_2.h5"),
+    val timed = MpesLoader.ingestTimed(spark, Seq(s"$dir/Scan0030_2.h5"),
       Seq("Stream_0" -> "X"))
     assert(timed.count() === 3)
-  }
-
-  test("hdf5: a GSD1 fixture and an equivalent .h5 ingest identically") {
-    val dir = Files.createTempDirectory("h5gsd").toFile.getPath
-    val payload = StreamFixture.StreamData(
-      startTs = 500.0,
-      channels = Seq("Stream_0" -> Array(5.0, 6.0), "Stream_1" -> Array(0.5, 0.6)),
-      msMarkers = Array(1L, 2L))
-    StreamFixture.write(s"$dir/a.gsd", payload)
-    StreamFixture.writeH5(s"$dir/a.h5", payload)
-    val aliases = Seq("Stream_0" -> "X", "Stream_1" -> "t")
-    val viaGsd = StreamFixture.ingest(spark, Seq(s"$dir/a.gsd"), aliases)
-      .drop("file_id").orderBy("seq").collect().map(_.toSeq)
-    val viaH5 = StreamFixture.ingest(spark, Seq(s"$dir/a.h5"), aliases)
-      .drop("file_id").orderBy("seq").collect().map(_.toSeq)
-    assert(viaGsd.toSeq === viaH5.toSeq)
   }
 }

@@ -290,25 +290,25 @@ class LoaderSpec extends SparkSpec {
     assert(GenericLoader.countRate(df, "ts") === 3.0 / 20.0)
   }
 
-  test("StreamFixture: binary stream files round-trip to the event table") {
-    val dir = Files.createTempDirectory("gsd").toFile.getPath
+  test("MpesLoader: binary stream files round-trip to the event table") {
+    val dir = Files.createTempDirectory("mpes").toFile.getPath
     // file written out of order on purpose: natural sort fixes ingestion order
-    StreamFixture.write(s"$dir/Scan2.gsd", StreamFixture.StreamData(
+    MpesLoader.writeH5(s"$dir/Scan2.h5", MpesLoader.StreamData(
       startTs = 2000.0,
       channels = Seq(
         "Stream_0" -> Array(10.0, 11.0, 12.0),
         "Stream_1" -> Array(0.5, 0.6, 0.7),
         "Stream_9" -> Array(9.9, 9.8, 9.7)), // unmapped dataset: skipped
       msMarkers = Array(1L, 3L)))
-    StreamFixture.write(s"$dir/Scan1.gsd", StreamFixture.StreamData(
+    MpesLoader.writeH5(s"$dir/Scan1.h5", MpesLoader.StreamData(
       startTs = 1000.0,
       channels = Seq(
         "Stream_0" -> Array(1.0, 2.0, 3.0, 4.0),
         "Stream_1" -> Array(0.1, 0.2, 0.3, 0.4)),
       msMarkers = Array(2L, 3L, 4L)))
     val aliases = Seq("Stream_0" -> "X", "Stream_1" -> "t")
-    val events = StreamFixture.ingest(spark,
-      Seq(s"$dir/Scan2.gsd", s"$dir/Scan1.gsd"), aliases)
+    val events = MpesLoader.ingest(spark,
+      Seq(s"$dir/Scan2.h5", s"$dir/Scan1.h5"), aliases)
     assert(events.columns.toSeq === Seq("file_id", "seq", "ts", "X", "t"))
     val rows = events.orderBy("file_id", "seq")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -332,13 +332,13 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
-  test("StreamFixture: timed table samples the last event per ms marker") {
-    val dir = Files.createTempDirectory("gsd2").toFile.getPath
-    StreamFixture.write(s"$dir/Scan0.gsd", StreamFixture.StreamData(
+  test("MpesLoader: timed table samples the last event per ms marker") {
+    val dir = Files.createTempDirectory("mpes2").toFile.getPath
+    MpesLoader.writeH5(s"$dir/Scan0.h5", MpesLoader.StreamData(
       startTs = 100.0,
       channels = Seq("Stream_0" -> Array(1.0, 2.0, 3.0, 4.0)),
       msMarkers = Array(0L, 2L, 4L)))
-    val timed = StreamFixture.ingestTimed(spark, Seq(s"$dir/Scan0.gsd"),
+    val timed = MpesLoader.ingestTimed(spark, Seq(s"$dir/Scan0.h5"),
       Seq("Stream_0" -> "X"))
     val rows = timed.orderBy("ms").collect()
       .map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -347,15 +347,35 @@ class LoaderSpec extends SparkSpec {
     assert(rows.toSeq === Seq((0L, 100.0, 1.0), (1L, 100.001, 2.0), (2L, 100.002, 4.0)))
   }
 
-  test("StreamFixture: missing configured dataset fails the ingest") {
-    val dir = Files.createTempDirectory("gsd3").toFile.getPath
-    StreamFixture.write(s"$dir/Scan0.gsd", StreamFixture.StreamData(
+  test("MpesLoader: missing configured dataset fails the ingest") {
+    val dir = Files.createTempDirectory("mpes3").toFile.getPath
+    MpesLoader.writeH5(s"$dir/Scan0.h5", MpesLoader.StreamData(
       startTs = 0.0, channels = Seq("Stream_0" -> Array(1.0)),
       msMarkers = Array(1L)))
-    val bad = StreamFixture.ingest(spark, Seq(s"$dir/Scan0.gsd"),
+    val bad = MpesLoader.ingest(spark, Seq(s"$dir/Scan0.h5"),
       Seq("Stream_0" -> "X", "Stream_7" -> "Y"))
     val e = intercept[org.apache.spark.SparkException] { bad.collect() }
     assert(e.getMessage.contains("missing datasets")
       || Option(e.getCause).exists(_.getMessage.contains("missing datasets")))
+  }
+
+  test("MpesLoader: a non-HDF5 input file fails the ingest with its name") {
+    val dir = Files.createTempDirectory("mpes4").toFile.getPath
+    MpesLoader.writeH5(s"$dir/Scan0.h5", MpesLoader.StreamData(
+      startTs = 0.0, channels = Seq("Stream_0" -> Array(1.0)),
+      msMarkers = Array(1L)))
+    val notH5 = s"$dir/Scan1.h5"
+    Files.write(java.nio.file.Paths.get(notH5),
+      "events as text, no HDF5 superblock".getBytes("UTF-8"))
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .flatMap(c => Option(c.getMessage)).toSeq
+    for (frame <- Seq(
+        MpesLoader.ingest(spark, Seq(s"$dir/Scan0.h5", notH5), Seq("Stream_0" -> "X")),
+        MpesLoader.ingestTimed(spark, Seq(s"$dir/Scan0.h5", notH5), Seq("Stream_0" -> "X")))) {
+      val e = intercept[org.apache.spark.SparkException] { frame.collect() }
+      assert(messages(e).exists(m => m.contains(notH5) && m.contains("not an HDF5 file")),
+        messages(e).mkString(" | "))
+    }
   }
 }

@@ -58,7 +58,7 @@ class RealFixtureSpec extends SparkSpec with graft.FixtureReport {
   test("real mpes fixture: channel aliases discovered from Name attrs") {
     assumeFixture(mpesPath)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(mpesPath))
-    val aliases = StreamFixture.groupsAndAliases(bytes)
+    val aliases = MpesLoader.groupsAndAliases(bytes)
     assert(aliases === Seq(
       "Stream_0" -> "X", "Stream_1" -> "Y", "Stream_2" -> "t",
       "Stream_3" -> "MasterRstCtr", "Stream_4" -> "ADC",
@@ -69,7 +69,7 @@ class RealFixtureSpec extends SparkSpec with graft.FixtureReport {
     assumeFixture(mpesPath)
     val aliases = Seq( // the reference's default mpes channels (X, Y, t, ADC)
       "Stream_0" -> "X", "Stream_1" -> "Y", "Stream_2" -> "t", "Stream_4" -> "ADC")
-    val df = StreamFixture.ingest(spark, Seq(mpesPath), aliases).cache()
+    val df = MpesLoader.ingest(spark, Seq(mpesPath), aliases).cache()
     try {
       assert(df.count() === 297398L)
       assert(df.columns.toSeq === Seq("file_id", "seq", "ts", "X", "Y", "t", "ADC"))
@@ -85,22 +85,21 @@ class RealFixtureSpec extends SparkSpec with graft.FixtureReport {
 
   test("real mpes fixture: ingestAuto discovers channels like the reference default") {
     assumeFixture(mpesPath)
-    val df = StreamFixture.ingestAuto(spark, Seq(mpesPath))
+    val df = MpesLoader.ingestAuto(spark, Seq(mpesPath))
     assert(df.columns.toSeq === Seq("file_id", "seq", "ts",
       "X", "Y", "t", "MasterRstCtr", "ADC", "State Input"))
     assert(df.count() === 297398L)
     // S8 Loader contract wrapper: events + timed + count-rate/elapsed
-    val (events, timedOpt) = StreamFixture.MpesH5Loader.readDataframe(
-      spark, Seq(mpesPath))
+    val (events, timedOpt) = MpesLoader.readDataframe(spark, Seq(mpesPath))
     assert(events.count() === 297398L)
     assert(timedOpt.get.count() === 4007L)
-    assert(StreamFixture.MpesH5Loader.elapsedTime(events, "ts") > 4.0)
-    assert(StreamFixture.MpesH5Loader.countRate(events, "ts") > 50000.0)
+    assert(MpesLoader.elapsedTime(events, "ts") > 4.0)
+    assert(MpesLoader.countRate(events, "ts") > 50000.0)
   }
 
   test("real mpes fixture: timed table has one row per ms marker") {
     assumeFixture(mpesPath)
-    val timed = StreamFixture.ingestTimed(
+    val timed = MpesLoader.ingestTimed(
       spark, Seq(mpesPath), Seq("Stream_0" -> "X")).cache()
     try {
       assert(timed.count() === 4007L)
