@@ -19,7 +19,8 @@ import org.apache.spark.sql.types._
   *    takes the whole per-train row;
   *  - per-train scalars are 1-D (T) datasets.
   *
-  * Scale shape: one `binaryFile` task per file decodes ALL channels in
+  * Scale shape: each file is opened in one task
+  * ([[ChannelLoader.fileBytesFrame]]), which decodes ALL channels in
   * one pass (datasets memoized, so the flash block is decoded once for
   * its four slices) into a long-format channel table — pass `bufferDir`
   * to convert it ONCE into a channel-partitioned parquet buffer (the
@@ -58,9 +59,9 @@ object InstrumentH5Loader extends Loader {
     StructField("values", ArrayType(DoubleType, containsNull = false),
       nullable = false)))
 
-  /** One `binaryFile` pass → long-format channel table
-    * `(file_id, channel, trainId, values)`; executor-side HDF5 decode,
-    * one task per file.
+  /** One [[ChannelLoader.fileBytesFrame]] pass → long-format channel
+    * table `(file_id, channel, trainId, values)`; executor-side HDF5
+    * decode, each file read and decoded whole inside one task.
     */
   def readChannelTable(
       spark: SparkSession,
@@ -137,7 +138,7 @@ object InstrumentH5Loader extends Loader {
     require(pe.exists(_.name == pulseChannel),
       s"pulse channel $pulseChannel must be per_electron")
     // each channel frame filters the long table, so WITHOUT
-    // materialization every frame would re-run the binaryFile decode —
+    // materialization every frame would re-read and re-decode the files —
     // buffer to parquet (the reference's own convert-once design, F6;
     // survives the session and partition-prunes on `channel`) or, when
     // no directory is given, cache for this session

@@ -41,23 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Which stages run and with what knobs. Defaults: quality + exact
-    * dedup on, everything else opt-in.
-    *
-    * @param keepLanguages  empty = keep all languages
-    * @param lineClean      C4 line-level cleaning before doc heuristics
-    *                       (None = skip)
-    * @param gopher         apply [[TextOps.gopherColumns]]' composite flag
-    * @param dropExact      exact dedup on normalized text
-    * @param nearDupThreshold Jaccard threshold for MinHash cluster drop
-    *                         (None = skip the near-dup stage)
-    * @param dsirTargetExpr SQL predicate naming the target slice for
-    *                       DSIR selection (None = skip; set with dsirKeepN)
-    * @param dsirKeepN      DSIR resample size (rows kept)
-    * @param dsirBuckets    DSIR hashed-feature bucket count
-    * @param resampleTo     target domain shares (empty = skip)
-    * @param splits         per-mille split ranges (empty = no split column)
-    */
   /** Knobs for the optional line-cleaning stage (C4 defaults). */
   final case class LineCleanConfig(
       minWords: Int = 3,
@@ -82,6 +65,25 @@ object Curation {
       maxDup2gram: Double = 0.2,
   )
 
+  /** Which stages run and with what knobs. Defaults: quality + exact
+    * dedup on, everything else opt-in.
+    *
+    * @param keepLanguages  empty = keep all languages
+    * @param lineClean      C4 line-level cleaning before doc heuristics
+    *                       (None = skip)
+    * @param gopher         apply [[TextOps.gopherColumns]]' composite flag
+    * @param dropExact      exact dedup on normalized text
+    * @param nearDupThreshold Jaccard threshold for MinHash cluster drop
+    *                         (None = skip the near-dup stage); the LSH
+    *                         plan is census-routed, see
+    *                         [[Dedup.minhashNearDuplicatesAuto]]
+    * @param dsirTargetExpr SQL predicate naming the target slice for
+    *                       DSIR selection (None = skip; set with dsirKeepN)
+    * @param dsirKeepN      DSIR resample size (rows kept)
+    * @param dsirBuckets    DSIR hashed-feature bucket count
+    * @param resampleTo     target domain shares (empty = skip)
+    * @param splits         per-mille split ranges (empty = no split column)
+    */
   final case class CurationConfig(
       keepLanguages: Set[String] = Set.empty,
       lineClean: Option[LineCleanConfig] = None,
@@ -90,19 +92,6 @@ object Curation {
       gopherConfig: GopherConfig = GopherConfig(),
       dropExact: Boolean = true,
       nearDupThreshold: Option[Double] = None,
-      // LSH physical plan: "auto" (default — a one-agg census routes
-      // duplicate-heavy corpora to the clique-robust inline plan before
-      // the sparse plan's pair exchanges cliff), "default", or "inline";
-      // see Dedup.minhashNearDuplicatesAuto
-      nearDupPlan: String = "auto",
-      // census cost knob for the auto plan: 1.0 (default) = exact census
-      // over a CACHED signature table that the chosen plan then reuses
-      // (one signature pass total); < 1 = uncached sampled census with
-      // exact-expectation rescale, for corpora too large to persist even
-      // spilled signatures — see Dedup.minhashNearDuplicatesAuto.
-      // pairMassPerDoc is the inline-routing threshold
-      nearDupCensusFraction: Double = 1.0,
-      nearDupPairMassPerDoc: Double = 32.0,
       sentenceCensor: Boolean = false,
       dsirTargetExpr: Option[String] = None,
       dsirKeepN: Option[Int] = None,
@@ -168,10 +157,7 @@ object Curation {
       cur = step("exact_dedup", Dedup.dropExactDuplicates(cur, textCol, idCol))
     cfg.nearDupThreshold.foreach { th =>
       cur = step("near_dedup",
-        Dedup.dropNearDuplicates(cur, textCol, idCol, threshold = th,
-          plan = cfg.nearDupPlan,
-          censusFraction = cfg.nearDupCensusFraction,
-          pairMassPerDoc = cfg.nearDupPairMassPerDoc))
+        Dedup.dropNearDuplicates(cur, textCol, idCol, threshold = th))
     }
     if (cfg.sentenceCensor) {
       // cross-doc boilerplate sentences drop; rebuilt text replaces the

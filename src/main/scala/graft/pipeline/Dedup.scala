@@ -182,29 +182,6 @@ object Dedup {
     if (df.rdd.getNumPartitions < want) df.repartition(p) else df
   }
 
-  /** MinHash+LSH near-duplicate pairs.
-    *
-    * Banding: the signature is cut into `bands` slices of `rows` hashes; a
-    * pair is a candidate iff some slice hashes equal. The plan is
-    * `project(band hashes) → posexplode → shuffle(band_idx, band_hash) →
-    * self-join within buckets → distinct candidate pairs → attach full
-    * signatures by keyed join → estimate Jaccard`. The band exchange
-    * carries ONLY `(id, band_idx, band_hash)` — never the signature
-    * array — so shuffle volume is ~24 B × bands per document instead of
-    * `bands × numHashes × 8 B`, and a pair matching in several bands is
-    * deduplicated BEFORE the (comparatively expensive) signature
-    * agreement count instead of recomputing it per matching band. The
-    * signature projection runs exactly ONCE: `(id, sig)` is hash-
-    * repartitioned by id, and that single exchange is the shared input of
-    * the band explode and of both signature-attach joins (identical
-    * canonical subtree → ReuseExchange / AQE stage reuse), as well as the
-    * partitioning the attach joins need. The only bucket-shuffle key is
-    * the band hash, so skew is bounded by bucket size, and the candidate
-    * set — not n² — drives the join cost.
-    *
-    * Returns `(id_a, id_b, est_jaccard)` with `id_a < id_b`, distinct,
-    * filtered to `est_jaccard >= threshold`.
-    */
   /** MinHash signature table `(id, sig)` — the reusable dedup index: at
     * scale, compute ONCE per corpus and persist (parquet, bucketed by
     * id) so every incremental batch ([[minhashNearDuplicatesAgainst]])
@@ -292,14 +269,24 @@ object Dedup {
     ).withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
   }
 
-  /** Near-duplicate pairs `(id_a, id_b, est_jaccard ≥ threshold)`,
-    * `id_a < id_b`, each pair exactly once. Two physical plans with
-    * identical output:
+  /** MinHash+LSH near-duplicate pairs `(id_a, id_b, est_jaccard ≥
+    * threshold)`, `id_a < id_b`, each pair exactly once.
+    *
+    * Banding: the signature is cut into `bands` slices of
+    * `numHashes / bands` hashes; a pair is a candidate iff some slice
+    * hashes equal, so the only bucket-shuffle key is the band hash and
+    * the candidate set — not n² — drives the join cost. The signature
+    * projection runs exactly ONCE: `(id, sig)` is hash-repartitioned by
+    * id, and that one exchange feeds the band explode and (default plan)
+    * both signature-attach joins. Two physical plans with identical
+    * output:
     *
     *  - default (`inlineVerify = false`): the SPARSE-duplicate shape for
     *    realistic web corpora (pairs ≪ docs × bands) — the band exchange
-    *    carries `(id, band_idx, band_hash)` only (~24 B/row), candidate
-    *    pairs distinct, signatures attach via two reused id-keyed joins.
+    *    carries `(id, band_idx, band_hash)` only (~24 B/row, never the
+    *    signature array), a pair matching in several bands is
+    *    deduplicated BEFORE its signature agreement count, and
+    *    signatures attach via two reused id-keyed joins.
     *  - `inlineVerify = true`: the CLIQUE-robust shape for
     *    heavy-duplication corpora — signatures ride the band exchange
     *    (~24 B + 8 B·numHashes per row) and pairs verify AT FORMATION,
@@ -309,11 +296,11 @@ object Dedup {
     *    (NOTES.md, "Round-9 ×64 pair-mass rehearsal"): on a ×64 near-dup
     *    clique corpus (every doc in a 64-clique, 11.1 M true pairs from
     *    320 k docs) the default plan's pair exchanges blow up to
-    *    11.4 GB shuffle / 506 s while the inline plan stays bounded by
-    *    docs × bands.
+    *    11.4 GB shuffle / 457 s while the inline plan stays bounded by
+    *    docs × bands (764 MB / 79.7 s).
     *
-    * Rule of thumb: default for ingest dedup of raw crawls; inline when
-    * the corpus is known duplicate-heavy (mirror lakes, version stacks).
+    * [[minhashNearDuplicatesAuto]] picks between the two from a census
+    * of the corpus; call this directly only to pin one plan.
     */
   def minhashNearDuplicates(
       df: DataFrame,
@@ -326,7 +313,6 @@ object Dedup {
       seed: Long = 42L,
       portable: Boolean = false,
       inlineVerify: Boolean = false,
-      pairKeyedDistinct: Boolean = false,
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // hash-repartition by id: this ONE exchange materializes the expensive
@@ -335,8 +321,7 @@ object Dedup {
     // attach joins' partitioning requirement)
     val sigs = minhashSignatures(df, textCol, idCol, k, numHashes, seed, portable)
       .repartition(col("id"))
-    minhashFromSigs(sigs, numHashes, bands, threshold, inlineVerify,
-      pairKeyedDistinct)
+    minhashFromSigs(sigs, numHashes, bands, threshold, inlineVerify)
   }
 
   /** Both physical near-dup plans over a prepared `(id, sig)` frame (see
@@ -404,8 +389,8 @@ object Dedup {
         // — an exchange AQE's skew handling cannot split (it covers
         // joins, not this aggregate's clustering). When the caller knows
         // a hot key is possible (`pairKeyedDistinct` — the auto path
-        // gates it on its band census's max bucket size), the distinct
-        // keys by the full (id_a, id_b) pair: partition mass is then
+        // sets it from [[hotKeyGuard]] on its census's max bucket), the
+        // distinct keys by the full (id_a, id_b) pair: partition mass is then
         // bounded by hash dispersion, at the cost of the one extra
         // exchange the first attach join re-inserts. Both shapes emit
         // the identical distinct pair set (spec-pinned).
@@ -439,10 +424,9 @@ object Dedup {
     *
     * Cost: one signature map pass + a `(band_idx, band_hash)` partial
     * aggregate whose shuffle is the DISTINCT bucket set only (ids are
-    * pruned before the exchange). At 100 TB set `fraction < 1` to census
-    * a deterministic doc sample instead: `E[sampled pairs] = fraction² ×
-    * pairs`, so both estimates rescale exactly in expectation and the
-    * census pass touches `fraction` of the corpus.
+    * pruned before the exchange). [[minhashNearDuplicatesAuto]] runs the
+    * same aggregate over its own signature shuffle; this standalone form
+    * reads the routing input without building a plan.
     */
   def minhashPairMassCensus(
       df: DataFrame,
@@ -453,16 +437,11 @@ object Dedup {
       bands: Int = 8,
       seed: Long = 42L,
       portable: Boolean = false,
-      fraction: Double = 1.0,
   ): (Double, Double) = {
-    require(fraction > 0.0 && fraction <= 1.0, "fraction must be in (0, 1]")
-    val base =
-      if (fraction >= 1.0) df
-      else df.sample(withReplacement = false, fraction, seed)
-    val sigs = minhashSignatures(base, textCol, idCol, k, numHashes, seed,
+    val sigs = minhashSignatures(df, textCol, idCol, k, numHashes, seed,
       portable)
     val (docs, pairMass, _) = censusOfSigs(sigs, numHashes, bands)
-    (docs / fraction, pairMass / (fraction * fraction))
+    (docs, pairMass)
   }
 
   /** The census aggregate over a prepared signature frame: (docs,
@@ -486,38 +465,52 @@ object Dedup {
       row.getLong(2))
   }
 
-  /** The plan rule [[minhashNearDuplicatesAuto]] encodes (previously
-    * NOTES-file folklore): route to the inline-verify plan when the
-    * census's pre-distinct pair mass exceeds `pairMassPerDoc × docs`.
+  /** Pre-distinct pair mass per document above which
+    * [[minhashNearDuplicatesAuto]] routes to the inline-verify plan.
     *
-    * Derivation of the default: the default plan's extra cost over inline
-    * is the pair-keyed exchanges, ≈ 24 B × pairMass through the distinct
+    * Derivation: the default plan's extra cost over inline is the
+    * pair-keyed exchanges, ≈ 24 B × pairMass through the distinct
     * plus ~(8·numHashes) B per verified pair through the sig-attach
     * joins; inline's extra cost is signatures riding the band exchange,
     * ≈ 8·numHashes B × bands × docs. With the defaults (32 hashes,
     * 8 bands) the crossover sits near pairMass ≈ 40–70 × docs; the ×16
     * rehearsal point (pairMass ≈ 66 × docs) already measured inline
-    * faster (7.0 s vs 11.4 s), so the default threshold is set a notch
-    * below at 32 — sparse web corpora (pairMass a small multiple of docs)
-    * keep the 24 B/row band exchange, duplicate-heavy lakes route inline
-    * well before the cliff.
+    * faster (7.0 s vs 11.4 s), so the threshold is set a notch below at
+    * 32 — sparse web corpora (pairMass a small multiple of docs) keep the
+    * 24 B/row band exchange, duplicate-heavy lakes route inline well
+    * before the cliff.
     */
-  def minhashPreferInline(
-      docs: Double, pairMass: Double, pairMassPerDoc: Double = 32.0,
-  ): Boolean = pairMass > pairMassPerDoc * docs
+  val inlinePairMassPerDoc: Double = 32.0
+
+  /** The plan rule [[minhashNearDuplicatesAuto]] encodes (previously
+    * NOTES-file folklore): route to the inline-verify plan when the
+    * census's pre-distinct pair mass exceeds [[inlinePairMassPerDoc]] ×
+    * docs.
+    */
+  def minhashPreferInline(docs: Double, pairMass: Double): Boolean =
+    pairMass > inlinePairMassPerDoc * docs
 
   /** Row cap for the hottest id_a through the default plan's id_a-keyed
     * distinct before the auto path falls back to (id_a, id_b) keying
-    * (`spark.graft.minhash.hotKeyRowCap`). The hottest document's pair
-    * count is bounded by `bands × (maxBucket − 1)` from the census; at
-    * ~24 B per candidate row the 4 M default caps the hot partition's
-    * extra mass near 100 MB — one task's comfortable working set. Only
-    * the regime where the default plan is still the right ROUTE but one
-    * key is hot trips this: pairMass ≤ 32 × docs with a single bucket of
-    * n docs implies n ≤ 8√docs, so the gate engages around 10¹¹ docs —
-    * or earlier on corpora whose mass concentrates in one bucket.
+    * ([[hotKeyGuard]]). The hottest document's pair count is bounded by
+    * `bands × (maxBucket − 1)` from the census; at ~24 B per candidate
+    * row the 4 M cap bounds the hot partition's extra mass near 100 MB —
+    * one task's comfortable working set. Only the regime where the
+    * default plan is still the right ROUTE but one key is hot trips
+    * this: pairMass ≤ 32 × docs with a single bucket of n docs implies
+    * n ≤ 8√docs, so the gate engages around 10¹¹ docs — or earlier on
+    * corpora whose mass concentrates in one bucket.
     */
-  val hotKeyRowCapDefault: Long = 4L << 20
+  val hotKeyRowCap: Long = 4L << 20
+
+  /** Whether the auto path keys the default plan's candidate distinct by
+    * the full (id_a, id_b) pair: only on the default route, and only when
+    * the hottest id_a's candidate mass, ≤ `bands × (maxBucket − 1)`,
+    * exceeds [[hotKeyRowCap]]. The inline route has no distinct to key.
+    */
+  private[graft] def hotKeyGuard(
+      inline: Boolean, bands: Int, maxBucket: Long): Boolean =
+    !inline && bands.toDouble * math.max(maxBucket - 1, 0L) > hotKeyRowCap
 
   /** Doc-count floor under which [[minhashNearDuplicatesAuto]] skips the
     * census (when the optimizer KNOWS the row count — CBO stats or a
@@ -593,10 +586,9 @@ object Dedup {
     * pass (a sampled census was measured first and saves nothing at bench
     * scale: the fixed scan+exchange dominates there, not shingling). No
     * cache entry is made: the shuffle files live as long as the returned
-    * frame and go when the ContextCleaner collects it. Corpora whose
-    * census should touch only a sample can pass `censusFraction < 1` to
-    * take the sampled-census path ([[minhashPairMassCensus]]'s
-    * exact-expectation rescale) and let the chosen plan re-shingle.
+    * frame and go when the ContextCleaner collects it. The route has no
+    * tuning knobs: the threshold is [[inlinePairMassPerDoc]], and the
+    * default route's hot-key guard is [[hotKeyGuard]].
     *
     * TOY-SCALE FLOOR: the census is a flat ~0.2–0.4 s Spark action, which
     * only matters when the dedup itself is sub-second — exactly the small
@@ -629,59 +621,42 @@ object Dedup {
       threshold: Double = 0.5,
       seed: Long = 42L,
       portable: Boolean = false,
-      pairMassPerDoc: Double = 32.0,
-      censusFraction: Double = 1.0,
       censusFloorBytes: Long = 8L << 20,
   ): DataFrame = {
-    def log(docs: Double, pairMass: Double, inline: Boolean): Unit =
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        f"minhash auto-plan: docs≈$docs%.0f, pre-distinct pair mass≈" +
-          f"$pairMass%.0f (${pairMass / math.max(docs, 1.0)}%.1f per doc) → " +
-          (if (inline) "inline-verify plan (duplicate-heavy)"
-           else "default sparse plan"))
+    val logger = org.slf4j.LoggerFactory.getLogger(getClass)
     if (censusFloorBytes > 0 && underCensusFloor(df, censusFloorBytes)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
+      logger.info(
         "minhash auto-plan: corpus under the census floor — default sparse " +
           "plan without a census (see censusFloorDocs)")
       return minhashNearDuplicates(df, textCol, idCol, k, numHashes, bands,
         threshold, seed, portable, inlineVerify = false)
     }
-    if (censusFraction < 1.0) {
-      val (docs, pairMass) = minhashPairMassCensus(df, textCol, idCol, k,
-        numHashes, bands, seed, portable, censusFraction)
-      val inline = minhashPreferInline(docs, pairMass, pairMassPerDoc)
-      log(docs, pairMass, inline)
-      minhashNearDuplicates(df, textCol, idCol, k, numHashes, bands,
-        threshold, seed, portable, inlineVerify = inline)
-    } else {
-      // the id shuffle runs here, once; census and chosen plan both read
-      // its map output. Its width is pinned to the shuffle partitions so
-      // AQE keeps the read un-coalesced: the frame is then plainly hash
-      // partitioned by id, and the chosen plan's id-keyed exchanges and
-      // attach joins reuse that instead of re-shuffling the signatures
-      // (a coalesced read matches only itself)
-      val sigs = org.apache.spark.sql.GraftBridge.ofExecutedRdd(
-        minhashSignatures(df, textCol, idCol, k, numHashes, seed, portable)
-          .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-            col("id")))
-      val (docs, pairMass, maxBucket) = censusOfSigs(sigs, numHashes, bands)
-      val inline = minhashPreferInline(docs, pairMass, pairMassPerDoc)
-      log(docs, pairMass, inline)
-      // hot-key guard for the default route (see [[hotKeyRowCapDefault]]):
-      // the hottest id_a's candidate mass is ≤ bands × (maxBucket − 1);
-      // above the cap, key the distinct by the full pair so no single
-      // partition inherits one document's entire candidate set
-      val hotCap = df.sparkSession.conf
-        .getOption("spark.graft.minhash.hotKeyRowCap")
-        .map(_.toLong).getOrElse(hotKeyRowCapDefault)
-      val pairKeyed = !inline &&
-        bands.toDouble * math.max(maxBucket - 1, 0L) > hotCap.toDouble
-      if (pairKeyed)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"minhash auto-plan: hot band bucket (max=$maxBucket docs) — " +
-            s"pair-keyed distinct engaged (cap=$hotCap rows)")
-      minhashFromSigs(sigs, numHashes, bands, threshold, inline, pairKeyed)
-    }
+    // the id shuffle runs here, once; census and chosen plan both read
+    // its map output. Its width is pinned to the shuffle partitions so
+    // AQE keeps the read un-coalesced: the frame is then plainly hash
+    // partitioned by id, and the chosen plan's id-keyed exchanges and
+    // attach joins reuse that instead of re-shuffling the signatures
+    // (a coalesced read matches only itself)
+    val sigs = org.apache.spark.sql.GraftBridge.ofExecutedRdd(
+      minhashSignatures(df, textCol, idCol, k, numHashes, seed, portable)
+        .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+          col("id")))
+    val (docs, pairMass, maxBucket) = censusOfSigs(sigs, numHashes, bands)
+    val inline = minhashPreferInline(docs, pairMass)
+    logger.info(
+      f"minhash auto-plan: docs≈$docs%.0f, pre-distinct pair mass≈" +
+        f"$pairMass%.0f (${pairMass / math.max(docs, 1.0)}%.1f per doc) → " +
+        (if (inline) "inline-verify plan (duplicate-heavy)"
+         else "default sparse plan"))
+    // hot-key guard for the default route: above the cap, key the
+    // distinct by the full pair so no single partition inherits one
+    // document's entire candidate set
+    val pairKeyed = hotKeyGuard(inline, bands, maxBucket)
+    if (pairKeyed)
+      logger.info(
+        s"minhash auto-plan: hot band bucket (max=$maxBucket docs) — " +
+          s"pair-keyed distinct engaged (cap=$hotKeyRowCap rows)")
+    minhashFromSigs(sigs, numHashes, bands, threshold, inline, pairKeyed)
   }
 
   /** Incremental near-dup matching: candidate pairs between a NEW batch
@@ -1313,10 +1288,11 @@ object Dedup {
     out
   }
 
-  /** End-to-end near-duplicate removal: MinHash-LSH candidate pairs →
-    * duplicate clusters → keep only each cluster's minimum id (plus all
-    * documents that never appeared in a pair). The anti-join keeps the
-    * corpus distributed throughout.
+  /** End-to-end near-duplicate removal: MinHash-LSH candidate pairs
+    * ([[minhashNearDuplicatesAuto]]'s census-routed plan) → duplicate
+    * clusters → keep only each cluster's minimum id (plus all documents
+    * that never appeared in a pair). The anti-join keeps the corpus
+    * distributed throughout.
     */
   def dropNearDuplicates(
       df: DataFrame,
@@ -1325,40 +1301,14 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 32,
       bands: Int = 8,
-      inlineVerify: Boolean = false,
-      plan: String = "",
-      censusFraction: Double = 1.0,
-      pairMassPerDoc: Double = 32.0,
   ): DataFrame = {
-    val pairs = pairsForPlan(df, textCol, idCol, threshold, numHashes, bands,
-      if (plan.nonEmpty) plan else if (inlineVerify) "inline" else "default",
-      censusFraction, pairMassPerDoc)
+    val pairs = minhashNearDuplicatesAuto(df, textCol, idCol,
+      numHashes = numHashes, bands = bands, threshold = threshold)
     val labels = connectedComponents(pairs)
     val losers = snapshotAndFree(
       labels.filter(col("id") =!= col("label")).select(col("id").as(idCol)),
       labels)
     df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** Pair generation for a named plan: `"default"` (sparse band
-    * exchange), `"inline"` (clique-robust inline verification), or
-    * `"auto"` (census-routed, [[minhashNearDuplicatesAuto]]).
-    */
-  private def pairsForPlan(
-      df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      numHashes: Int, bands: Int, plan: String,
-      censusFraction: Double = 1.0, pairMassPerDoc: Double = 32.0,
-  ): DataFrame = plan match {
-    case "default" => minhashNearDuplicates(df, textCol, idCol,
-      numHashes = numHashes, bands = bands, threshold = threshold)
-    case "inline" => minhashNearDuplicates(df, textCol, idCol,
-      numHashes = numHashes, bands = bands, threshold = threshold,
-      inlineVerify = true)
-    case "auto" => minhashNearDuplicatesAuto(df, textCol, idCol,
-      numHashes = numHashes, bands = bands, threshold = threshold,
-      pairMassPerDoc = pairMassPerDoc, censusFraction = censusFraction)
-    case other => throw new IllegalArgumentException(
-      s"unknown minhash plan '$other' (expected default | inline | auto)")
   }
 
   /** Near-duplicate removal keeping the BEST-scoring member of each
@@ -1380,14 +1330,9 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 32,
       bands: Int = 8,
-      inlineVerify: Boolean = false,
-      plan: String = "",
-      censusFraction: Double = 1.0,
-      pairMassPerDoc: Double = 32.0,
   ): DataFrame = {
-    val pairs = pairsForPlan(df, textCol, idCol, threshold, numHashes, bands,
-      if (plan.nonEmpty) plan else if (inlineVerify) "inline" else "default",
-      censusFraction, pairMassPerDoc)
+    val pairs = minhashNearDuplicatesAuto(df, textCol, idCol,
+      numHashes = numHashes, bands = bands, threshold = threshold)
     val clash = df.columns.toSet.intersect(Set("_cluster", "_rk"))
     require(clash.isEmpty,
       s"input already has reserved column(s) ${clash.mkString(", ")} — " +

@@ -138,16 +138,17 @@ class ClusterSmokeSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(self.forall(_._3 === 1.0))
   }
 
-  test("minhash auto census + MEMORY_ONLY persist route correctly with" +
-      " executor-side storage, parity with the direct plan") {
+  test("minhash auto census over the shared signature shuffle routes" +
+      " correctly with executor-side shuffle files, parity with the" +
+      " direct plan") {
     assume(haveData)
     val docs = SparkEntry.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull).repartition(8)
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // censusFloorBytes = 0 forces the census + cached-signature reuse —
-    // the path whose persist blocks now live in executor JVMs
+    // censusFloorBytes = 0 forces the census; census and chosen plan read
+    // one signature shuffle whose map output lives in executor JVMs
     val auto = pairs(pipeline.Dedup.minhashNearDuplicatesAuto(
       docs, "text", "doc_id", threshold = 0.2, portable = true,
       censusFloorBytes = 0L))

@@ -148,7 +148,7 @@ class Hdf5Spec extends SparkSpec {
     assert(e2.getMessage.contains("implausible datatype size 72"), e2.getMessage)
   }
 
-  test("hdf5: mpes-layout .h5 ingests through the Spark binaryFile path") {
+  test("hdf5: mpes-layout .h5 ingests through the Spark file-bytes path") {
     val dir = Files.createTempDirectory("h5").toFile.getPath
     MpesLoader.writeH5(s"$dir/Scan0030_2.h5", MpesLoader.StreamData(
       startTs = 1.6e9 + 0.25,
@@ -163,7 +163,8 @@ class Hdf5Spec extends SparkSpec {
     assert(data.startTs === 1.6e9 + 0.25)
     assert(data.channels.map(_._1) === Seq("Stream_0", "Stream_1", "Stream_2"))
     assert(data.msMarkers.toSeq === Seq(2L, 3L, 4L))
-    // full Spark ingestion: binaryFile scan → decode → event table
+    // full Spark ingestion: per-file byte read in the task → decode →
+    // event table
     val events = MpesLoader.ingest(spark, Seq(s"$dir/Scan0030_2.h5"),
       Seq("Stream_0" -> "X", "Stream_2" -> "t"))
     val rows = events.orderBy("seq").collect()

@@ -74,7 +74,7 @@ class PipelineSpec extends SparkSpec {
     assert(!plan.contains("HashAggregate"), plan) // no pair distinct
   }
 
-  test("minhash pair-mass census: exact on cliques, sample-rescaled") {
+  test("minhash pair-mass census: exact on cliques") {
     // 6 base docs × 8 identical copies: every copy-clique agrees in all
     // bands, so pairMass = bands × Σ 8·7/2 = 8 × 6 × 28
     val clique = docs.withColumn("copy", explode(sequence(lit(0), lit(7))))
@@ -84,31 +84,6 @@ class PipelineSpec extends SparkSpec {
     // identical copies contribute 8×28 per base doc; the near-dup base
     // pairs (0-1 identical, 0-2/1-2 close) add cross-clique mass on top
     assert(pm >= 8 * 6 * 28.0)
-    // sampled census rescales: same corpus, fraction=0.5 → docs estimate
-    // within a loose band (deterministic seed, exact equality not owed)
-    val (ds, _) = Dedup.minhashPairMassCensus(clique, "text", "doc_id",
-      fraction = 0.5)
-    assert(ds > 20 && ds < 90, s"sampled docs estimate $ds")
-  }
-
-  test("sampled census (the shipped 0.1 default) routes like exact census") {
-    // big enough that the 0.1 sample clears the tiny-corpus fallback
-    // (sampled docs ≈ 600 ≥ 400): routing decisions must match the exact
-    // census on both corpus shapes the rule separates
-    val benign = spark.range(6000).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 8).map(j =>
-        concat(lit(s"w${j}_"), col("id"))): _*).as("text"))
-    val cliques = spark.range(6000).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 8).map(j =>
-        concat(lit(s"w${j}_"), col("id") % 120)): _*).as("text"))
-    for ((corpus, expectInline) <- Seq(benign -> false, cliques -> true)) {
-      val exact = Dedup.minhashPairMassCensus(corpus, "text", "doc_id")
-      val sampled = Dedup.minhashPairMassCensus(corpus, "text", "doc_id",
-        fraction = 0.1)
-      assert(Dedup.minhashPreferInline(exact._1, exact._2) === expectInline)
-      assert(Dedup.minhashPreferInline(sampled._1, sampled._2) === expectInline,
-        s"sampled census flipped routing: exact=$exact sampled=$sampled")
-    }
   }
 
   test("minhash auto plan routes a clique corpus to the inline shape," +
@@ -158,10 +133,14 @@ class PipelineSpec extends SparkSpec {
 
   test("hot-key guard: degenerate bucket flips the distinct to pair keying," +
       " pair set unchanged") {
-    // one hot band bucket: 8 byte-identical copies per base doc agree in
-    // EVERY band (maxBucket = 8), while pairMassPerDoc = 1e18 pins the
-    // ROUTE to the default (distinct-carrying) plan — isolating the
-    // guard. Cap 10 < bands × (maxBucket − 1) = 56 ⇒ pair-keyed distinct.
+    // the decision: engaged only on the default route, and only once the
+    // hottest id_a's candidate bound bands × (maxBucket − 1) passes the cap
+    val capBucket = Dedup.hotKeyRowCap / 8 + 1 // 8 × (n − 1) == cap
+    assert(!Dedup.hotKeyGuard(inline = false, 8, capBucket))
+    assert(Dedup.hotKeyGuard(inline = false, 8, capBucket + 1))
+    assert(!Dedup.hotKeyGuard(inline = true, 8, capBucket + 1))
+    // the pair-keyed plan on one hot band bucket: 8 byte-identical copies
+    // per base doc agree in EVERY band (maxBucket = 8)
     val clique = docs.withColumn("copy", explode(sequence(lit(0), lit(7))))
       .select((col("doc_id") * 100 + col("copy")).as("doc_id"), col("text"))
     def norm(df: org.apache.spark.sql.DataFrame) =
@@ -178,23 +157,30 @@ class PipelineSpec extends SparkSpec {
     val pairKeyedRe = "hashpartitioning\\(id_a#\\d+L?, id_b#\\d+L?".r
     val want = norm(Dedup.minhashNearDuplicates(clique, "text", "doc_id",
       threshold = 0.5))
-    spark.conf.set("spark.graft.minhash.hotKeyRowCap", "10")
-    try {
-      val guarded = Dedup.minhashNearDuplicatesAuto(clique, "text", "doc_id",
-        threshold = 0.5, pairMassPerDoc = 1e18, censusFloorBytes = 0L)
-      assert(norm(guarded) === want) // identical distinct pair set
-      val plan = finalPlan(guarded)
-      // the distinct's exchange carries BOTH pair columns: the hottest
-      // id_a's candidate mass now disperses by id_b instead of landing
-      // on one partition
-      assert(pairKeyedRe.findFirstIn(plan).isDefined, plan)
-    } finally spark.conf.unset("spark.graft.minhash.hotKeyRowCap")
-    // with the default (high) cap the same corpus keeps the shared
-    // id_a-keyed exchange — the guard costs nothing until it triggers
-    val unguarded = Dedup.minhashNearDuplicatesAuto(clique, "text", "doc_id",
-      threshold = 0.5, pairMassPerDoc = 1e18, censusFloorBytes = 0L)
-    assert(norm(unguarded) === want)
-    assert(pairKeyedRe.findFirstIn(finalPlan(unguarded)).isEmpty)
+    val sigs = Dedup.minhashSignatures(clique, "text", "doc_id")
+      .repartition(col("id"))
+    val guarded = Dedup.minhashFromSigs(sigs, 32, 8, 0.5,
+      inlineVerify = false, pairKeyedDistinct = true)
+    assert(norm(guarded) === want) // identical distinct pair set
+    // the distinct's exchange carries BOTH pair columns: the hottest
+    // id_a's candidate mass now disperses by id_b instead of landing on
+    // one partition
+    val plan = finalPlan(guarded)
+    assert(pairKeyedRe.findFirstIn(plan).isDefined, plan)
+    // on a corpus the census routes to the default plan, auto keeps the
+    // shared id_a-keyed exchange — the guard costs nothing until it
+    // triggers (3 copies per base doc: pair mass under the inline rule)
+    val sparse = docs.withColumn("copy", explode(sequence(lit(0), lit(2))))
+      .select((col("doc_id") * 100 + col("copy")).as("doc_id"), col("text"))
+    val (d, pm) = Dedup.minhashPairMassCensus(sparse, "text", "doc_id")
+    assert(!Dedup.minhashPreferInline(d, pm))
+    val unguarded = Dedup.minhashNearDuplicatesAuto(sparse, "text", "doc_id",
+      threshold = 0.5, censusFloorBytes = 0L)
+    assert(norm(unguarded) === norm(Dedup.minhashNearDuplicates(sparse,
+      "text", "doc_id", threshold = 0.5)))
+    val autoPlan = finalPlan(unguarded)
+    assert(autoPlan.contains("HashAggregate"), autoPlan) // default route
+    assert(pairKeyedRe.findFirstIn(autoPlan).isEmpty, autoPlan)
   }
 
   test("auto plan skips the census entirely under the toy-scale floor") {
